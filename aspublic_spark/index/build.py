@@ -25,14 +25,13 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   packed blocks are the ONLY stored copy of the postings (~half the
   index storage of a raw+packed layout);
 - the pack shuffle keys on (slice, term, fld, salt): heavy-hitter
-  terms are split across ``ceil(df/salt_max)`` salts keyed by doc
-  hash, so no single reducer ever materializes a full Zipf-head
-  posting list (north_rule's explicit skew handling). The salt plan
-  needs term df BEFORE the shuffle: incremental generations read it
-  from the current global dictionary (exact for the existing corpus,
-  a predictor for the batch); a first build estimates it from a 1%
-  token sample. The plan is a pure PERFORMANCE hint — any term can
-  be salted or not without affecting query results;
+  terms are split so no single reducer ever materializes a full
+  Zipf-head posting list (north_rule's explicit skew handling). Salting
+  is decided LOCALLY inside each map task (``_PartialCut``): a group
+  salts by task once the task's own posting count for it crosses
+  ~salt_max_postings / n_map_tasks — no df estimate, no plan job. The
+  salt is a pure PERFORMANCE hint — any term can be salted or not
+  without affecting query results;
 - blocks carry (min_doc, max_doc, max_tf, min_dl, sum_tf) so the
   query side can do block-max WAND pruning (score bounds computed at
   QUERY time from max_tf/min_dl under the then-current avgdl — safe
@@ -53,9 +52,10 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   dictionaries — per-batch cost independent of corpus history;
 - `compact()` merges generations and `prune_index(cutoff)` drops/
   rewrites them by time, both behind crash-safe pending markers; both
-  reconstruct shuffle-ready postings from the packed blocks with a
-  fully vectorized unpacker (position payloads are re-SLICED per
-  posting, never decoded).
+  reconstruct posting rows from the packed blocks with a fully
+  vectorized unpacker (position payloads are re-SLICED per posting,
+  never decoded) and re-pack them through the build's own map-side
+  cut, shuffle and reducer — every index writer shares ONE pack path.
 
 Commit protocol (object-store-safe — see fsio.py for the exact two
 guarantees it relies on; the reference gets this from sqlite
@@ -96,11 +96,12 @@ BLOCK_SCHEMA = (
     "sum_tf long, max_tf int, min_dl int"
 )
 
-# shuffle-time postings schema: one row per (doc, field, term);
-# positions already varint-encoded ([n, first, deltas...] —
-# codec.encode_grouped_records) so the pack shuffle moves compressed
-# bytes, not array<int>. This schema only exists IN FLIGHT (the
-# compaction/prune unpack output); it is never persisted. `fld` is
+# posting-row schema: one row per (doc, field, term); positions
+# already varint-encoded ([n, first, deltas...] —
+# codec.encode_grouped_records). This schema only exists IN FLIGHT:
+# it is the compaction/prune unpack output, semi-joined against the
+# kept docs and then cut into PARTIAL_SCHEMA rows; it is never
+# persisted and never crosses the pack shuffle. `fld` is
 # the indexed-column ordinal (FTS5 indexes N columns per row,
 # `fts5(text, subject, ...)`, reference common/db_sqlite.py:27).
 RAW_SCHEMA = (
@@ -108,8 +109,9 @@ RAW_SCHEMA = (
 )
 RAW_FORMAT = 4
 
-# shuffle-time PARTIAL-BLOCK schema (the BUILD's in-flight format):
-# BLOCK_SCHEMA minus block_id. The tokenize tasks cut their postings at
+# shuffle-time PARTIAL-BLOCK schema (the ONE pack-shuffle format of
+# every index writer): BLOCK_SCHEMA minus block_id. The map tasks (the
+# build tokenizer, or the compaction/prune re-cut) cut their postings at
 # block_size boundaries and compute each block's metadata map-side, so
 # a FULL row (n == block_size) is already a finished block: the pack
 # reducer passes its payload bytes through VERBATIM (guide §8: heavy
@@ -126,6 +128,7 @@ PARTIAL_SCHEMA = (
     "doc_gaps binary, tfs binary, dls binary, positions binary, "
     "sum_tf long, max_tf int, min_dl int"
 )
+PARTIAL_COLS = [f.split()[0] for f in PARTIAL_SCHEMA.split(", ")]
 
 
 # -- snapshot readers (shared by IndexBuilder and SearchEngine) ----------
@@ -169,27 +172,141 @@ def read_stats(index_dir: str, fs: FileSystem | None = None) -> list[dict]:
     return fs.read_json(os.path.join(index_dir, "stats.json"))["by_fld"]
 
 
-def _raw_postings_arrow_factory(
-    store_positions: bool,
-    n_fields: int = 1,
-    analyzer: str = "fts5",
-    partial_salt_threshold: int | None = None,
-    block_size: int = 128,
-):
-    """mapInArrow fn: (slice, doc_id, f0[, f1...]) batches -> raw postings.
+class _PartialCut:
+    """The map-side block cut every index writer shares: postings
+    sorted by (slice, fld, term, doc) -> PARTIAL_SCHEMA rows, grouped
+    by (slice, fld, term), CUT AT block_size BOUNDARIES with per-block
+    metadata computed here. A full row (n == block_size) is a finished
+    index block the reducer ships verbatim; only each group's
+    undersized tail row merges with other tasks' tails at the reducer.
+    ``buf``/``off`` hold the per-posting position payloads laid out in
+    the same sorted order (``off`` has one entry per posting plus the
+    end), so per-block payloads are contiguous zero-copy slices; both
+    are None when positionless.
 
-    Replaces the former JVM higher-order-function position extraction,
-    which rescanned the token array once per distinct term
-    (O(distinct_terms x doc_len) — quadratic on long documents). This
-    is linear in total token count and vectorized at BATCH level: one
+    One instance per map task. Salting is decided LOCALLY: a group
+    salts to ``partition id + 1`` once the task's cumulative posting
+    count for it reaches ``salt_threshold`` — no global heavy-term
+    probe job, and every task (partition 0 included) salts alike. The
+    reducer-bound contract is preserved: with threshold L ~=
+    salt_max_postings / n_map_tasks, an unsalted (slice, term, fld)
+    group receives < L postings from each task, so its reducer group
+    stays ~salt_max bounded; a genuinely heavy term crosses L in every
+    task and spreads one salt per task. Any assignment is
+    result-identical (salt is purely a shuffle-splitting key)."""
+
+    def __init__(self, block_size: int, store_positions: bool, salt_threshold: int):
+        from pyspark import TaskContext
+
+        tc = TaskContext.get()
+        self.salt = (tc.partitionId() if tc is not None else 0) + 1
+        self.block_size = block_size
+        self.store_positions = store_positions
+        self.threshold = salt_threshold
+        # postings seen so far per group, as a sorted array of 64-bit
+        # (fld, slice, term) hash keys: a collision only salts early
+        self.keys = np.empty(0, dtype=np.uint64)
+        self.counts = np.empty(0, dtype=np.int64)
+
+    def _salts(self, keys, n_g):
+        """Add this batch's group sizes to the task's cumulative counts
+        (``keys`` are unique within a batch) and salt the groups whose
+        count has reached the threshold."""
+        pos = np.searchsorted(self.keys, keys)
+        hit = pos < self.keys.size
+        hit[hit] = self.keys[pos[hit]] == keys[hit]
+        cum = n_g.copy()
+        cum[hit] += self.counts[pos[hit]]
+        self.counts[pos[hit]] = cum[hit]
+        if not hit.all():
+            k = np.concatenate([self.keys, keys[~hit]])
+            order = np.argsort(k, kind="stable")
+            self.keys = k[order]
+            self.counts = np.concatenate([self.counts, cum[~hit]])[order]
+        return np.where(cum >= self.threshold, self.salt, 0).astype(np.int32)
+
+    def __call__(self, sl_s, fld_s, code_s, doc_s, tf_s, dl_s, buf, off, take_terms):
+        import pandas as pd
+        import pyarrow as pa
+
+        np_post = doc_s.size
+        gstart = np.empty(np_post, dtype=bool)
+        gstart[0] = True
+        gstart[1:] = (
+            (sl_s[1:] != sl_s[:-1])
+            | (fld_s[1:] != fld_s[:-1])
+            | (code_s[1:] != code_s[:-1])
+        )
+        group_of_row = np.cumsum(gstart) - 1
+        gs = np.flatnonzero(gstart)
+        n_g = np.diff(np.append(gs, np_post))
+        # per-group salt first (cumulative local rule), then cut blocks
+        term_hash = pd.util.hash_array(
+            take_terms(np.arange(int(code_s.max()) + 1)).to_numpy(zero_copy_only=False)
+        )
+        gsalts = self._salts(
+            term_hash[code_s[gs]]
+            ^ (sl_s[gs].astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15))
+            ^ (fld_s[gs].astype(np.uint64) * np.uint64(0xC2B2AE3D27D4EB4F)),
+            n_g,
+        )
+        in_group = np.arange(np_post, dtype=np.int64) - gs[group_of_row]
+        starts = np.flatnonzero(gstart | (in_group % self.block_size == 0))
+        blk = codec.pack_all_blocks(doc_s, tf_s, dl_s, starts, as_arrow=True)
+        sum_tf = np.add.reduceat(tf_s, starts)
+        if self.store_positions:
+            blk_off = np.empty(starts.size + 1, dtype=np.int64)
+            blk_off[:-1] = off[starts]
+            blk_off[-1] = buf.size
+            positions = codec.binary_from_stream(buf, blk_off)
+        else:
+            positions = codec.binary_from_stream(
+                np.empty(0, dtype=np.uint8),
+                np.zeros(starts.size + 1, dtype=np.int64),
+            )
+        return pa.record_batch(
+            [
+                pa.array(sl_s[starts], type=pa.int32()),
+                take_terms(code_s[starts]),
+                pa.array(fld_s[starts], type=pa.int32()),
+                pa.array(gsalts[group_of_row[starts]], type=pa.int32()),
+                pa.array(blk["n"], type=pa.int32()),
+                pa.array(blk["min_doc"], type=pa.int64()),
+                pa.array(blk["max_doc"], type=pa.int64()),
+                blk["doc_gaps"],
+                blk["tfs"],
+                blk["dls"],
+                positions,
+                pa.array(sum_tf.astype(np.int64), type=pa.int64()),
+                pa.array(blk["max_tf"].astype(np.int32), type=pa.int32()),
+                pa.array(blk["min_dl"].astype(np.int32), type=pa.int32()),
+            ],
+            names=PARTIAL_COLS,
+        )
+
+
+def _tokenize_partials_arrow_factory(
+    store_positions: bool,
+    n_fields: int,
+    analyzer: str,
+    block_size: int,
+    salt_threshold: int,
+):
+    """mapInArrow fn: (slice, doc_id, f0[, f1...]) batches -> partial
+    blocks (PARTIAL_SCHEMA), through the shared :class:`_PartialCut`.
+
+    Linear in total token count and vectorized at BATCH level: one
     term factorization over every token of the batch, one lexsort by
-    (doc, term_code, position), group boundaries by diff. Positions
-    leave here as per-posting varint payloads IN ONE shared buffer
-    (an Arrow binary array built from offsets — no Python bytes
-    object per posting); the pack stage concatenates the bytes
-    verbatim (identical block layout to the previous encoder). Each
-    indexed field is tokenized independently (per-field dl and
-    positions, exactly like FTS5 columns).
+    (slice, term_code) over a doc-ordered token stream, group
+    boundaries by diff. Each batch's rows are ordered by doc_id once,
+    before tokenizing (rows are far fewer than tokens), so the stable
+    lexsort leaves docs ascending within every (slice, term) group —
+    which the block cut needs for its min_doc/max_doc bounds and
+    non-negative doc gaps — and positions in order within each doc.
+    Positions are varint-encoded here IN ONE shared buffer (no Python
+    bytes object per posting). Each indexed field is tokenized
+    independently (per-field dl and positions, exactly like FTS5
+    columns).
 
     Tokenization fast path: on rows whose characters are all
     ``[a-z0-9]`` + ASCII whitespace, the FTS5 unicode61 analyzer IS
@@ -209,105 +326,12 @@ def _raw_postings_arrow_factory(
     tokenize = get_analyzer(analyzer)
     arrow_fast = analyzer == "fts5"
     _dirty_re = "[^a-z0-9 \t\n\r\x0b\x0c]"
-    # per-TASK cumulative (fld, slice, term) posting counts for the
-    # local salting rule; reset at the top of emit() (one emit() call
-    # per task, single-threaded)
-    _salt_cum: dict = {}
 
-    def _emit_partials(slice_p, doc_p, code_p, tf_p, dl_p, buf, off, take_terms, fld):
-        """Emit PARTIAL_SCHEMA rows: THIS batch's postings grouped by
-        (slice, term), docs sorted ascending, CUT AT block_size
-        BOUNDARIES with per-block metadata computed here — a full row
-        (n == block_size) is a finished index block the reducer ships
-        verbatim; only each group's undersized tail row merges with
-        other tasks' tails at the reducer. ``buf``/``off`` hold the
-        per-posting position payloads in pre-sort posting order (None
-        when positionless).
-
-        Salting is decided LOCALLY (r6): a group salts by map-task id
-        once the task's cumulative posting count for it reaches
-        ``partial_salt_threshold`` — no global heavy-term probe job.
-        The reducer-bound contract is preserved: with threshold L ~=
-        salt_max_postings / n_map_tasks, an unsalted (slice, term, fld)
-        group receives < L postings from each task, so its reducer
-        group stays ~salt_max bounded; a genuinely heavy term crosses L
-        in every task and spreads one salt per task. Any assignment is
-        result-identical (salt is purely a shuffle-splitting key,
-        pinned by the partial-vs-raw content-equality test)."""
-        from pyspark import TaskContext
-
-        # rows arrive ALREADY sorted by (slice, code, doc) — _emit_groups
-        # sorts postings once in this final order for the partial path,
-        # so no second lexsort and no gathers here; the positions buffer
-        # is likewise already laid out in final order, so per-block
-        # payloads are contiguous zero-copy slices
-        sl_s, do_s, co_s2 = slice_p, doc_p, code_p
-        tf_s, dl_s = tf_p, dl_p
-        np_post = do_s.size
-        gstart = np.empty(np_post, dtype=bool)
-        gstart[0] = True
-        gstart[1:] = (sl_s[1:] != sl_s[:-1]) | (co_s2[1:] != co_s2[:-1])
-        group_of_row = np.cumsum(gstart) - 1
-        gs = np.flatnonzero(gstart)
-        ge = np.append(gs[1:], np_post)
-        # per-group salt first (cumulative local rule), then cut blocks
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        gsalts = np.zeros(len(gs), dtype=np.int32)
-        if pid and partial_salt_threshold:
-            terms_g = take_terms(co_s2[gs]).to_pylist()
-            sl_g = sl_s[gs]
-            n_g = ge - gs
-            thr = partial_salt_threshold
-            for i in range(len(gs)):
-                key = (fld, int(sl_g[i]), terms_g[i])
-                v = _salt_cum.get(key, 0) + int(n_g[i])
-                _salt_cum[key] = v
-                if v >= thr:
-                    gsalts[i] = pid
-        in_group = np.arange(np_post, dtype=np.int64) - gs[group_of_row]
-        starts = np.flatnonzero(gstart | (in_group % block_size == 0))
-        blk = codec.pack_all_blocks(do_s, tf_s, dl_s, starts, as_arrow=True)
-        sum_tf = np.add.reduceat(tf_s, starts)
-        if store_positions:
-            blk_off = np.empty(starts.size + 1, dtype=np.int64)
-            blk_off[:-1] = off[starts]
-            blk_off[-1] = buf.size
-            positions = codec.binary_from_stream(buf, blk_off)
-        else:
-            positions = codec.binary_from_stream(
-                np.empty(0, dtype=np.uint8),
-                np.zeros(starts.size + 1, dtype=np.int64),
-            )
-        bgroup = group_of_row[starts]
-        return pa.record_batch(
-            [
-                pa.array(sl_s[starts], type=pa.int32()),
-                take_terms(co_s2[starts]),
-                pa.array(np.full(len(starts), fld, dtype=np.int32), type=pa.int32()),
-                pa.array(gsalts[bgroup], type=pa.int32()),
-                pa.array(blk["n"], type=pa.int32()),
-                pa.array(blk["min_doc"], type=pa.int64()),
-                pa.array(blk["max_doc"], type=pa.int64()),
-                blk["doc_gaps"],
-                blk["tfs"],
-                blk["dls"],
-                positions,
-                pa.array(sum_tf.astype(np.int64), type=pa.int64()),
-                pa.array(blk["max_tf"].astype(np.int32), type=pa.int32()),
-                pa.array(blk["min_dl"].astype(np.int32), type=pa.int32()),
-            ],
-            names=[
-                "slice", "term", "fld", "salt", "n", "min_doc", "max_doc",
-                "doc_gaps", "tfs", "dls", "positions",
-                "sum_tf", "max_tf", "min_dl",
-            ],
-        )
-
-    def _emit_groups(slice_sub, doc_sub, lens, codes, take_terms, fld):
-        """Shared posting-group assembly: ``lens`` = tokens per doc,
-        ``codes`` = term codes in doc-major position order,
-        ``take_terms(idx) -> pa.Array`` resolves codes to strings."""
+    def _emit_groups(cut, slice_sub, doc_sub, lens, codes, take_terms, fld):
+        """Shared posting-group assembly: ``lens`` = tokens per doc
+        (docs ascending), ``codes`` = term codes in doc-major position
+        order, ``take_terms(idx) -> pa.Array`` resolves codes to
+        strings."""
         n = lens.size
         total = int(lens.sum())
         if total == 0:
@@ -318,18 +342,11 @@ def _raw_postings_arrow_factory(
         np.cumsum(lens[:-1], out=doc_off[1:])
         pos_in_doc = np.arange(total, dtype=np.int64) - doc_off[doc_idx]
         # np.lexsort is STABLE and the token stream arrives doc-major
-        # with positions ascending, so sorting by the GROUP keys alone
-        # preserves (doc, pos) order within equal keys — half the sort
-        # keys of the naive (…, doc, pos) sort
-        if partial_salt_threshold is not None:
-            # partial path: sort ONCE in the shuffle-final order
-            # (slice, term, doc, pos) so _emit_partials needs no second
-            # lexsort and per-block payloads are contiguous slices of
-            # the positions buffer; (doc, term) groups stay contiguous
-            # with in-order positions either way
-            order = np.lexsort((codes, slice_sub[doc_idx]))
-        else:
-            order = codes.argsort(kind="stable")
+        # (docs ascending) with positions ascending, so sorting by the
+        # GROUP keys alone yields the shuffle-final (slice, term, doc,
+        # pos) order: the cut needs no second sort and per-block
+        # payloads are contiguous slices of the positions buffer
+        order = np.lexsort((codes, slice_sub[doc_idx]))
         di_s, co_s, po_s = doc_idx[order], codes[order], pos_in_doc[order]
         gstart = np.empty(total, dtype=bool)
         gstart[0] = True
@@ -340,52 +357,19 @@ def _raw_postings_arrow_factory(
         buf = off = None
         if store_positions:
             buf, off = codec.encode_grouped_records_offsets(po_s, g_lens)
-        if partial_salt_threshold is not None:
-            return _emit_partials(
-                slice_sub[g_di],
-                doc_sub[g_di],
-                co_s[starts],
-                g_lens.astype(np.int64),
-                lens[g_di],
-                buf,
-                off,
-                take_terms,
-                fld,
-            )
-        if store_positions:
-            pos_arr = pa.Array.from_buffers(
-                pa.binary(),
-                starts.size,
-                [
-                    None,
-                    pa.py_buffer(off.astype(np.int32).tobytes()),
-                    pa.py_buffer(buf.tobytes()),
-                ],
-            )
-        else:
-            pos_arr = pa.Array.from_buffers(
-                pa.binary(),
-                starts.size,
-                [
-                    None,
-                    pa.py_buffer(np.zeros(starts.size + 1, dtype=np.int32).tobytes()),
-                    pa.py_buffer(b""),
-                ],
-            )
-        return pa.record_batch(
-            [
-                pa.array(slice_sub[g_di], type=pa.int32()),
-                pa.array(doc_sub[g_di], type=pa.int64()),
-                pa.array(np.full(starts.size, fld, dtype=np.int32), type=pa.int32()),
-                pa.array(lens[g_di].astype(np.int32), type=pa.int32()),
-                take_terms(co_s[starts]),
-                pa.array(g_lens.astype(np.int32), type=pa.int32()),
-                pos_arr,
-            ],
-            names=["slice", "doc_id", "fld", "dl", "term", "tf", "positions"],
+        return cut(
+            slice_sub[g_di],
+            np.full(starts.size, fld, dtype=np.int32),
+            co_s[starts],
+            doc_sub[g_di],
+            g_lens.astype(np.int64),
+            lens[g_di],
+            buf,
+            off,
+            take_terms,
         )
 
-    def one_field_py(slice_np, doc_np, texts, fld):
+    def one_field_py(cut, slice_np, doc_np, texts, fld):
         import pandas as pd
 
         n = len(texts)
@@ -403,6 +387,7 @@ def _raw_postings_arrow_factory(
         codes, uniques = pd.factorize(flat, sort=False)
         uniques = np.asarray(uniques, dtype=object)
         return _emit_groups(
+            cut,
             slice_np,
             doc_np,
             lens,
@@ -411,11 +396,11 @@ def _raw_postings_arrow_factory(
             fld,
         )
 
-    def one_field_arrow(slice_np, doc_np, col, fld):
+    def one_field_arrow(cut, slice_np, doc_np, col, fld):
         """Yields 0-2 record batches: the Arrow-tokenized clean rows and
-        the Python-tokenized rest. Posting rows are doc-local, so row
-        order across the two sub-batches is irrelevant (the pack
-        shuffle re-keys everything)."""
+        the Python-tokenized rest. Each keeps the batch's doc order;
+        partial rows of one group from the two sub-batches merge at
+        the pack reducer like any other tails."""
         n = len(col)
         col = pc.fill_null(col, "")
         trimmed = pc.ascii_trim_whitespace(col)
@@ -440,6 +425,7 @@ def _raw_postings_arrow_factory(
             codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
             dic = de.dictionary
             out = _emit_groups(
+                cut,
                 slice_np[clean_idx],
                 doc_np[clean_idx],
                 lens,
@@ -452,26 +438,29 @@ def _raw_postings_arrow_factory(
         dirty_idx = np.flatnonzero(dirty)
         if dirty_idx.size:
             texts = col.take(pa.array(dirty_idx)).to_pylist()
-            out = one_field_py(slice_np[dirty_idx], doc_np[dirty_idx], texts, fld)
+            out = one_field_py(cut, slice_np[dirty_idx], doc_np[dirty_idx], texts, fld)
             if out is not None:
                 yield out
 
     def emit(batches):
-        _salt_cum.clear()  # fresh per task (worker processes are reused)
+        cut = _PartialCut(block_size, store_positions, salt_threshold)
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            slice_np = batch.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
             doc_np = batch.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            if (doc_np[1:] < doc_np[:-1]).any():
+                order = np.argsort(doc_np, kind="stable")
+                batch, doc_np = batch.take(pa.array(order)), doc_np[order]
+            slice_np = batch.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
             for fld in range(n_fields):
                 if arrow_fast:
                     yield from one_field_arrow(
-                        slice_np, doc_np, batch.column(f"f{fld}"), fld
+                        cut, slice_np, doc_np, batch.column(f"f{fld}"), fld
                     )
                 else:
                     out = one_field_py(
-                        slice_np, doc_np, batch.column(f"f{fld}").to_pylist(), fld
+                        cut, slice_np, doc_np, batch.column(f"f{fld}").to_pylist(), fld
                     )
                     if out is not None:
                         yield out
@@ -479,73 +468,51 @@ def _raw_postings_arrow_factory(
     return emit
 
 
-def _term_count_arrow_factory(n_fields: int, analyzer: str):
-    """mapInArrow fn for the salt plan's sample: (f0[, f1...]) batches
-    -> (term, fld, cnt) partial occurrence counts, aggregated per batch
-    in Arrow C++ (``value_counts``). Same clean/dirty tokenization
-    hybrid as :func:`_raw_postings_arrow_factory`: rows of
-    ``[a-z0-9]`` + ASCII whitespace split in Arrow, anything else takes
-    the exact per-row analyzer — identical token streams, so the df
-    estimate matches what the build will actually shuffle."""
+def _raw_to_partials_arrow_factory(
+    block_size: int, store_positions: bool, salt_threshold: int
+):
+    """mapInArrow fn: RAW_SCHEMA posting rows -> PARTIAL_SCHEMA rows.
+
+    The compaction/prune re-pack input (postings unpacked from stored
+    blocks, semi-joined against the kept docs) enters the SAME map-side
+    cut and local salting as the build tokenizer, so every index
+    writer shares one shuffle format and one reducer. Per batch: one
+    lexsort by (slice, fld, term, doc) and one byte gather of the
+    per-posting position payloads (re-sliced, never decoded)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    from aspublic_spark.functions.stemmer import get_analyzer
-
-    tokenize = get_analyzer(analyzer)
-    arrow_fast = analyzer == "fts5"
-    _dirty_re = "[^a-z0-9 \t\n\r\x0b\x0c]"
-
-    def emit(batches):
+    def run(batches):
+        cut = _PartialCut(block_size, store_positions, salt_threshold)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            for fld in range(n_fields):
-                col = pc.fill_null(batch.column(f"f{fld}"), "")
-                trimmed = pc.ascii_trim_whitespace(col)
-                parts = []
-                if arrow_fast:
-                    dirty = pc.match_substring_regex(
-                        trimmed, _dirty_re
-                    ).to_numpy(zero_copy_only=False)
-                    empty = pc.equal(trimmed, "").to_numpy(zero_copy_only=False)
-                    clean_idx = np.flatnonzero(~dirty & ~empty)
-                    if clean_idx.size:
-                        sub = (
-                            trimmed
-                            if clean_idx.size == len(col)
-                            else trimmed.take(pa.array(clean_idx))
-                        )
-                        parts.append(pc.list_flatten(pc.ascii_split_whitespace(sub)))
-                    dirty_idx = np.flatnonzero(dirty)
-                else:
-                    dirty_idx = np.arange(len(col))
-                if dirty_idx.size:
-                    toks = [
-                        t
-                        for s in col.take(pa.array(dirty_idx)).to_pylist()
-                        for t in (tokenize(s) if s else [])
-                    ]
-                    if toks:
-                        parts.append(pa.array(toks, type=pa.string()))
-                if not parts:
-                    continue
-                flat = pa.concat_arrays([p.cast(pa.string()) for p in parts])
-                vc = pc.value_counts(flat)
-                if len(vc) == 0:
-                    continue
-                yield pa.record_batch(
-                    [
-                        vc.field("values"),
-                        pa.array(
-                            np.full(len(vc), fld, dtype=np.int32), type=pa.int32()
-                        ),
-                        vc.field("counts"),
-                    ],
-                    names=["term", "fld", "cnt"],
-                )
 
-    return emit
+            def col(name, dt):
+                return batch.column(name).to_numpy(zero_copy_only=False).astype(dt)
+
+            sl, fl, doc = col("slice", np.int32), col("fld", np.int32), col("doc_id", np.int64)
+            tf, dl = col("tf", np.int64), col("dl", np.int64)
+            tdict = _one_chunk(batch.column("term").dictionary_encode())
+            codes = tdict.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+            order = np.lexsort((doc, codes, fl, sl))
+            buf = off = None
+            if store_positions:
+                data, st, ln = _binary_col_view(batch.column("positions"))
+                buf, off = _gather_payload(data, st[order], ln[order])
+            yield cut(
+                sl[order], fl[order], codes[order], doc[order], tf[order], dl[order],
+                buf, off, lambda idx: tdict.dictionary.take(pa.array(idx)),
+            )
+
+    return run
+
+
+def _n_partitions(df: DataFrame) -> int:
+    """Partition count of a plan without an exchange (no job runs)."""
+    try:
+        return max(1, df.rdd.getNumPartitions())
+    except Exception:
+        return 32
 
 
 def bm25_weight_col(tf_col, dl_col, avgdl: float):
@@ -609,6 +576,51 @@ def _gather_payload(data: np.ndarray, starts_b: np.ndarray, lens_b: np.ndarray):
     return data[gather], cum
 
 
+def _decode_block_rows(tbl, store_positions: bool):
+    """Decode block-shaped rows (``n``, ``doc_gaps``, ``tfs``, ``dls``
+    [, ``positions``] — stored blocks or partial rows) of one Arrow
+    batch or table: every row's payloads concatenate into one stream
+    per column and decode in ONE varint pass (varints are
+    self-delimiting); absolute doc ids come from a grouped cumsum.
+    Positions are never decoded: a varint-end scan finds each
+    posting's record (posting k spans tf_k + 1 varints), and since
+    records tile the stream, posting k's compressed bytes are
+    ``pos[pos_off[k]:pos_off[k + 1]]``. Returns None when the rows hold
+    no postings."""
+    n_np = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
+    total = int(n_np.sum())
+    if total == 0:
+        return None
+    row_starts = np.zeros(n_np.size, dtype=np.int64)
+    np.cumsum(n_np[:-1], out=row_starts[1:])
+
+    def _concat(name):
+        # per-row payloads are adjacent in Arrow binary storage
+        data, st, ln = _binary_col_view(tbl.column(name))
+        return data[st[0] : st[-1] + ln[-1]]
+
+    enc = codec.decode_varints(_concat("doc_gaps").tobytes())
+    enc[row_starts] = codec._unzigzag(enc[row_starts]).view(np.uint64)
+    csum = np.cumsum(enc, dtype=np.uint64)
+    base = csum[row_starts] - enc[row_starts]
+    tf = codec.decode_varints(_concat("tfs").tobytes()).astype(np.int64)
+    out = {
+        "row": np.repeat(np.arange(n_np.size, dtype=np.int64), n_np),
+        "doc": (csum - np.repeat(base, n_np)).view(np.int64),
+        "tf": tf,
+        "dl": codec.decode_varints(_concat("dls").tobytes()).astype(np.int64),
+    }
+    if store_positions:
+        pos = _concat("positions")
+        elem_ends = np.flatnonzero((pos & 0x80) == 0)
+        rec_first = np.zeros(total, dtype=np.int64)
+        np.cumsum(tf[:-1] + 1, out=rec_first[1:])
+        pos_off = np.zeros(total + 1, dtype=np.int64)
+        pos_off[1:] = elem_ends[rec_first + tf] + 1
+        out["pos"], out["pos_off"] = pos, pos_off
+    return out
+
+
 def _assemble_blocks(
     block_size: int,
     store_positions: bool,
@@ -623,12 +635,13 @@ def _assemble_blocks(
     pos_bytes_sorted,
     pos_cum,
 ):
-    """Shared block assembly over postings SORTED by (slice, term, fld,
-    salt, doc): block boundaries for the whole partition at once,
-    codec.pack_all_blocks varint-encodes doc gaps/tfs/dls in one
-    vectorized pass each, position payloads are byte-sliced per block
-    without ever being decoded. Used by both pack inputs (raw posting
-    rows from compaction/prune, partial-block rows from the build)."""
+    """Block assembly over postings SORTED by (slice, term, fld, salt,
+    doc), for the pack reducer's tail merge: block boundaries for the
+    whole partition at once, codec.pack_all_blocks varint-encodes doc
+    gaps/tfs/dls in one vectorized pass each, position payloads are
+    byte-sliced per block without ever being decoded. Output columns
+    are PARTIAL_COLS (block_id is assigned by the caller over all of
+    its blocks)."""
     import pyarrow as pa
 
     n = doc_s.size
@@ -642,11 +655,8 @@ def _assemble_blocks(
     )
     group_id = np.cumsum(is_group_start) - 1
     gs = np.flatnonzero(is_group_start)
-    group_start_row = gs[group_id]
-    in_group_pos = np.arange(n, dtype=np.int64) - group_start_row
-    is_block_start = is_group_start | (in_group_pos % block_size == 0)
-    starts = np.flatnonzero(is_block_start)
-    ends = np.append(starts[1:], n)
+    in_group_pos = np.arange(n, dtype=np.int64) - gs[group_id]
+    starts = np.flatnonzero(is_group_start | (in_group_pos % block_size == 0))
 
     blk = codec.pack_all_blocks(doc_s, tf_s, dl_s, starts, as_arrow=True)
     if store_positions:
@@ -661,26 +671,12 @@ def _assemble_blocks(
     # per-block tf sum: lets the dictionary's cf/total-token
     # aggregates run over block METADATA instead of postings
     sum_tf = np.add.reduceat(tf_s, starts)
-    # block_id = index of block within its group
-    blk_group = group_id[starts]
-    new_group = np.empty(len(starts), dtype=bool)
-    new_group[0] = True
-    new_group[1:] = blk_group[1:] != blk_group[:-1]
-    first_idx = np.flatnonzero(new_group)
-    first_blk_of_group = first_idx[np.cumsum(new_group) - 1]
-    block_ids = np.arange(len(starts), dtype=np.int64) - first_blk_of_group
-
-    if isinstance(tstrings, list):
-        terms_out = pa.array([tstrings[c] for c in tc_s[starts]], type=pa.string())
-    else:
-        terms_out = tstrings.take(pa.array(tc_s[starts]))
     return pa.record_batch(
         [
             pa.array(slice_s[starts], type=pa.int32()),
-            terms_out,
+            tstrings.take(pa.array(tc_s[starts])),
             pa.array(fld_s[starts], type=pa.int32()),
             pa.array(salt_s[starts], type=pa.int32()),
-            pa.array(block_ids.astype(np.int32), type=pa.int32()),
             pa.array(blk["n"], type=pa.int32()),
             pa.array(blk["min_doc"], type=pa.int64()),
             pa.array(blk["max_doc"], type=pa.int64()),
@@ -692,154 +688,56 @@ def _assemble_blocks(
             pa.array(blk["max_tf"].astype(np.int32), type=pa.int32()),
             pa.array(blk["min_dl"].astype(np.int32), type=pa.int32()),
         ],
-        names=[
-            "slice", "term", "fld", "salt", "block_id", "n", "min_doc", "max_doc",
-            "doc_gaps", "tfs", "dls", "positions", "sum_tf", "max_tf", "min_dl",
-        ],
+        names=PARTIAL_COLS,
     )
-
-
-def _pack_partition_arrow_factory(block_size: int, store_positions: bool):
-    """mapInArrow fn: pack one shuffle partition of RAW posting rows
-    into blocks (compaction/prune path — the build ships partial-block
-    rows instead, see _pack_partials_arrow_factory).
-
-    The partition holds complete (slice, term, salt) groups (guaranteed
-    by the upstream repartition on the same keys). EVERYTHING is
-    columnar: the sort is one np.lexsort, and the shared
-    _assemble_blocks does boundary/packing work for the whole partition
-    at once. Python-side cost is O(blocks) byte-slices, not O(postings).
-    """
-    import pyarrow as pa
-
-    def pack(batches):
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            return
-        slice_np = tbl.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-        salt_np = tbl.column("salt").to_numpy(zero_copy_only=False).astype(np.int32)
-        fld_np = tbl.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
-        doc_np = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        tf_np = tbl.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-        dl_np = tbl.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
-        tdict = _one_chunk(tbl.column("term").dictionary_encode())
-        tcodes = tdict.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        tstrings = tdict.dictionary.to_pylist()
-
-        order = np.lexsort((doc_np, salt_np, fld_np, tcodes, slice_np))
-        slice_s, salt_s, doc_s = slice_np[order], salt_np[order], doc_np[order]
-        tf_s, dl_s, tc_s, fld_s = tf_np[order], dl_np[order], tcodes[order], fld_np[order]
-
-        # positions arrive as per-posting varint payloads (RAW_SCHEMA);
-        # a block's payload is the byte-concatenation of its rows' bytes
-        # in sorted order — gather the bytes, never decode/re-encode
-        pos_bytes_sorted = pos_cum = None
-        if store_positions:
-            vdata, pstarts, plens = _binary_col_view(tbl.column("positions"))
-            pos_bytes_sorted, pos_cum = _gather_payload(
-                vdata, pstarts[order], plens[order]
-            )
-        yield _assemble_blocks(
-            block_size, store_positions, slice_s, salt_s, fld_s, tc_s,
-            tstrings, doc_s, tf_s, dl_s, pos_bytes_sorted, pos_cum,
-        )
-
-    return pack
 
 
 def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
     """mapInArrow fn: pack one shuffle partition of PARTIAL-BLOCK rows
-    (the build's in-flight format) into final blocks.
+    (the in-flight format of every index writer) into final blocks.
 
     FULL rows (n == block_size) are finished blocks cut map-side: their
     payload bytes pass through VERBATIM — no varint decode, no posting
     sort, no re-encode (guide §8: the heavy bytes cross the shuffle
     once and are never touched again). Only TAIL rows (n < block_size)
     take the merge path: the same one-varint-pass-per-column decode as
-    the query-side unpack, a posting lexsort, and re-assembly into
-    blocks; positions are never decoded even there — per-posting byte
-    boundaries come from a varint-end scan (posting k spans tf_k + 1
-    varints) and the compressed bytes are re-sliced verbatim, so the
-    merged payload is bit-identical to a raw-row pack of the same
-    postings. block_id is assigned over the combined output per
-    (slice, term, fld, salt) group in (min_doc, max_doc) order —
-    deterministic, since a (doc, term, fld) posting exists exactly
-    once globally, so blocks of one group can't share min_doc."""
+    the compaction unpacker, a posting lexsort, and re-assembly into
+    blocks; positions are never decoded even there — the compressed
+    per-posting bytes are re-sliced verbatim. block_id is assigned
+    over the combined output per (slice, term, fld, salt) group in
+    (min_doc, max_doc) order — deterministic, since a (doc, term, fld)
+    posting exists exactly once globally, so blocks of one group can't
+    share min_doc."""
     import pyarrow as pa
 
-    OUT_COLS = [
-        "slice", "term", "fld", "salt", "n", "min_doc", "max_doc",
-        "doc_gaps", "tfs", "dls", "positions", "sum_tf", "max_tf", "min_dl",
-    ]
-
     def _merge_tails(tbl):
-        """Today's decode->sort->assemble path, over the tail subset."""
-        nb = tbl.num_rows
-        n_np = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-        total = int(n_np.sum())
-        if total == 0:
+        """decode -> sort -> assemble, over the tail subset."""
+        d = _decode_block_rows(tbl, store_positions)
+        if d is None:
             return None
-        row_starts = np.zeros(nb, dtype=np.int64)
-        np.cumsum(n_np[:-1], out=row_starts[1:])
-        row_of_post = np.repeat(np.arange(nb, dtype=np.int64), n_np)
+        row = d["row"]
 
-        def _concat(name):
-            data, st, ln = _binary_col_view(tbl.column(name))
-            return data[st[0] : st[-1] + ln[-1]] if nb else data
+        def col(name):
+            return tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int32)[row]
 
-        # doc ids: zigzag firsts per partial row, grouped cumsum
-        enc = codec.decode_varints(_concat("doc_gaps").tobytes())
-        firsts = codec._unzigzag(enc[row_starts]).view(np.uint64)
-        enc[row_starts] = firsts
-        csum = np.cumsum(enc, dtype=np.uint64)
-        base = csum[row_starts] - enc[row_starts]
-        doc_np = (csum - np.repeat(base, n_np)).view(np.int64)
-        tf_np = codec.decode_varints(_concat("tfs").tobytes()).astype(np.int64)
-        dl_np = codec.decode_varints(_concat("dls").tobytes()).astype(np.int64)
-
-        slice_r = tbl.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-        salt_r = tbl.column("salt").to_numpy(zero_copy_only=False).astype(np.int32)
-        fld_r = tbl.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
+        slice_np, salt_np, fld_np = col("slice"), col("salt"), col("fld")
         tdict = _one_chunk(tbl.column("term").dictionary_encode())
-        tcodes_r = tdict.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-
-        slice_np = slice_r[row_of_post]
-        salt_np = salt_r[row_of_post]
-        fld_np = fld_r[row_of_post]
-        tcodes = tcodes_r[row_of_post]
+        tcodes = tdict.indices.to_numpy(zero_copy_only=False).astype(np.int64)[row]
+        doc_np, tf_np, dl_np = d["doc"], d["tf"], d["dl"]
 
         order = np.lexsort((doc_np, salt_np, fld_np, tcodes, slice_np))
-        slice_s, salt_s, doc_s = slice_np[order], salt_np[order], doc_np[order]
-        tf_s, dl_s, tc_s, fld_s = tf_np[order], dl_np[order], tcodes[order], fld_np[order]
-
         pos_bytes_sorted = pos_cum = None
         if store_positions:
-            pbytes = _concat("positions")
-            # per-posting byte boundaries: posting k's record is
-            # [n=tf_k, first, deltas...] = tf_k + 1 varint elements
-            is_end = (pbytes & 0x80) == 0
-            elem_ends = np.flatnonzero(is_end)
-            elem_starts = np.empty_like(elem_ends)
-            if elem_ends.size:
-                elem_starts[0] = 0
-                elem_starts[1:] = elem_ends[:-1] + 1
-            rec_first = np.zeros(total, dtype=np.int64)
-            np.cumsum(tf_np[:-1] + 1, out=rec_first[1:])
-            rec_last = rec_first + tf_np
-            byte_s = elem_starts[rec_first]
-            byte_l = elem_ends[rec_last] + 1 - byte_s
+            off = d["pos_off"]
             pos_bytes_sorted, pos_cum = _gather_payload(
-                pbytes, byte_s[order], byte_l[order]
+                d["pos"], off[:-1][order], np.diff(off)[order]
             )
         merged = _assemble_blocks(
-            block_size, store_positions, slice_s, salt_s, fld_s, tc_s,
-            tdict.dictionary, doc_s, tf_s, dl_s, pos_bytes_sorted, pos_cum,
+            block_size, store_positions, slice_np[order], salt_np[order],
+            fld_np[order], tcodes[order], tdict.dictionary, doc_np[order],
+            tf_np[order], dl_np[order], pos_bytes_sorted, pos_cum,
         )
-        return pa.Table.from_batches([merged]).select(OUT_COLS)
+        return pa.Table.from_batches([merged])
 
     def pack(batches):
         batch_list = list(batches)
@@ -867,7 +765,7 @@ def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
                 if full_mask.all()
                 else tbl.filter(pa.array(full_mask)).combine_chunks()
             )
-            parts.append(full.select(OUT_COLS))
+            parts.append(full.select(PARTIAL_COLS))
         if not parts:
             return
         out = (
@@ -909,110 +807,48 @@ def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
     return pack
 
 
-def _unpack_blocks_to_raw_factory(store_positions: bool, with_gen: bool = True):
-    """mapInArrow fn: packed blocks -> shuffle-ready raw postings rows.
+def _unpack_blocks_to_raw_factory(store_positions: bool):
+    """mapInArrow fn: packed blocks (with a ``gen`` column) -> RAW_SCHEMA
+    posting rows plus ``gen``.
 
     The inverse of the pack stage, used by compact()/prune_index() to
-    reconstruct postings for re-packing WITHOUT a stored raw table.
-    Fully vectorized per batch: every block's doc_gaps/tfs/dls byte
-    payloads concatenate into one stream per column and decode in ONE
-    varint pass (varints are self-delimiting), per-block absolute doc
-    ids come from a grouped cumsum, and the positions payload is never
-    decoded at all — per-posting boundaries are found by a single
-    varint-end scan (posting k's record spans tf_k + 1 varints) and the
-    compressed bytes are re-sliced verbatim, so a pack->unpack->pack
-    round trip is bit-identical.
-    """
+    reconstruct postings for the semi-join and the re-cut WITHOUT a
+    stored raw table. Fully vectorized per batch
+    (:func:`_decode_block_rows`); the positions payload is never
+    decoded — each posting's compressed record is a zero-copy slice of
+    the batch's positions stream, so a pack->unpack->pack round trip
+    is bit-identical."""
     import pyarrow as pa
 
     def run(batches):
         for batch in batches:
-            nb = batch.num_rows
-            if nb == 0:
+            d = _decode_block_rows(batch, store_positions)
+            if d is None:
                 continue
-            n_np = batch.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-            total = int(n_np.sum())
-            if total == 0:
-                continue
-            starts = np.zeros(nb, dtype=np.int64)
-            np.cumsum(n_np[:-1], out=starts[1:])
-            blk_of_post = np.repeat(np.arange(nb, dtype=np.int64), n_np)
+            row = d["row"]
 
-            def _concat_bytes(name):
-                col = batch.column(name)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                voff = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-                    col.offset : col.offset + len(col) + 1
-                ].astype(np.int64)
-                dbuf = col.buffers()[2]
-                data = (
-                    np.frombuffer(dbuf, dtype=np.uint8)
-                    if dbuf is not None
-                    else np.empty(0, dtype=np.uint8)
-                )
-                # per-row payloads are adjacent in arrow binary storage
-                return data[voff[0] : voff[-1]], voff - voff[0]
-
-            # --- doc ids: one varint pass, zigzag firsts, grouped cumsum
-            gbytes, _ = _concat_bytes("doc_gaps")
-            enc = codec.decode_varints(gbytes.tobytes())
-            firsts = codec._unzigzag(enc[starts]).view(np.uint64)
-            enc[starts] = firsts
-            csum = np.cumsum(enc, dtype=np.uint64)
-            base = csum[starts] - enc[starts]
-            doc_ids = (csum - np.repeat(base, n_np)).view(np.int64)
-
-            tbytes, _ = _concat_bytes("tfs")
-            tfs = codec.decode_varints(tbytes.tobytes()).astype(np.int64)
-            dbytes_, _ = _concat_bytes("dls")
-            dls = codec.decode_varints(dbytes_.tobytes()).astype(np.int64)
-
-            term_col = batch.column("term")
-            if isinstance(term_col, pa.ChunkedArray):
-                term_col = term_col.combine_chunks()
-            terms_out = term_col.take(pa.array(blk_of_post))
-            slice_np = batch.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-            fld_np = batch.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
-            cols = [
-                pa.array(slice_np[blk_of_post], type=pa.int32()),
-                pa.array(doc_ids, type=pa.int64()),
-                pa.array(fld_np[blk_of_post], type=pa.int32()),
-                pa.array(dls.astype(np.int32), type=pa.int32()),
-                terms_out,
-                pa.array(tfs.astype(np.int32), type=pa.int32()),
-            ]
-            names = ["slice", "doc_id", "fld", "dl", "term", "tf"]
+            def col(name):
+                return batch.column(name).to_numpy(zero_copy_only=False).astype(np.int32)[row]
 
             if store_positions:
-                pbytes, _ = _concat_bytes("positions")
-                is_end = (pbytes & 0x80) == 0
-                elem_ends = np.flatnonzero(is_end)
-                elem_starts = np.empty_like(elem_ends)
-                if elem_ends.size:
-                    elem_starts[0] = 0
-                    elem_starts[1:] = elem_ends[:-1] + 1
-                # posting k's record is [n=tf_k, first, deltas...]:
-                # tf_k + 1 varint elements
-                rec_first = np.zeros(total, dtype=np.int64)
-                np.cumsum(tfs[:-1] + 1, out=rec_first[1:])
-                rec_last = rec_first + tfs
-                byte_s = elem_starts[rec_first]
-                byte_e = elem_ends[rec_last] + 1
-                pview = pbytes.tobytes()
-                payloads = [pview[s:e] for s, e in zip(byte_s, byte_e)]
-                cols.append(pa.array(payloads, type=pa.binary()))
+                positions = codec.binary_from_stream(d["pos"], d["pos_off"])
             else:
-                cols.append(
-                    pa.array(np.full(total, b"", dtype=object), type=pa.binary())
+                positions = codec.binary_from_stream(
+                    np.empty(0, dtype=np.uint8), np.zeros(row.size + 1, dtype=np.int64)
                 )
-            names.append("positions")
-
-            if with_gen:
-                gen_np = batch.column("gen").to_numpy(zero_copy_only=False).astype(np.int32)
-                cols.append(pa.array(gen_np[blk_of_post], type=pa.int32()))
-                names.append("gen")
-            yield pa.record_batch(cols, names=names)
+            yield pa.record_batch(
+                [
+                    pa.array(col("slice"), type=pa.int32()),
+                    pa.array(d["doc"], type=pa.int64()),
+                    pa.array(col("fld"), type=pa.int32()),
+                    pa.array(d["dl"].astype(np.int32), type=pa.int32()),
+                    _one_chunk(batch.column("term")).take(pa.array(row)),
+                    pa.array(d["tf"].astype(np.int32), type=pa.int32()),
+                    positions,
+                    pa.array(col("gen"), type=pa.int32()),
+                ],
+                names=["slice", "doc_id", "fld", "dl", "term", "tf", "positions", "gen"],
+            )
 
     return run
 
@@ -1190,7 +1026,7 @@ class IndexBuilder:
         self._clear_gen_manifests(gen)
         # Two independent heads: the n_slices LIMIT probe (first build
         # only, bounded) and the docs write; salting is decided inside
-        # the pack job's map tasks (r6 local rule — no salt-plan job at
+        # the pack job's map tasks (local rule, _PartialCut — no salt job at
         # all), so the fused tokenize->pack job starts immediately. The
         # docs write is submitted from a driver thread first and the
         # pack job runs under it; Spark schedules concurrent jobs FIFO,
@@ -1230,7 +1066,10 @@ class IndexBuilder:
                 )
             docs_fut = pool.submit(self._stage_docs, df, gen)
             try:
-                self._stage_pack_fused(df, gen)
+                # tokenize -> partial blocks -> shuffle -> pack, in ONE
+                # job: the only pass over the corpus text and the only
+                # data shuffle of the build
+                self._pack_partials(self._tokenized(df), gen)
             finally:
                 n_docs = docs_fut.result()
         self._stage_gen_dict(gen, n_docs=n_docs)
@@ -1258,9 +1097,9 @@ class IndexBuilder:
         """Size n_slices from the first build's corpus volume.
 
         A LocalLimit probe answers "more than MIN_SLICES full slices of
-        docs?" with bounded cost regardless of input size (same trick
-        as the salt plan's heavy-term probe); only genuinely large
-        first builds pay the column-pruned count() that sizes them."""
+        docs?" with bounded cost regardless of input size; only
+        genuinely large first builds pay the column-pruned count() that
+        sizes them."""
         cap = self.MIN_SLICES * self.DOCS_PER_SLICE
         probe = df.select(F.lit(1).alias("one")).limit(cap + 1).count()
         if probe <= cap:
@@ -1302,21 +1141,24 @@ class IndexBuilder:
         ).parquet(self._p("docs", f"gen={gen}"))
         return int(obs.get["n"] or 0)
 
-    def _tokenized(
-        self, df: DataFrame, partial_salt_threshold: int | None = None
-    ) -> DataFrame:
-        """Input scan -> shuffle-ready postings (IN FLIGHT only).
+    def _salt_threshold(self, n_map_tasks: int) -> int:
+        """Local salting threshold for a map-side cut run by
+        ``n_map_tasks`` tasks (see _PartialCut): L ~= salt_max_postings
+        / n_map_tasks, so an unsalted group's reducer receives at most
+        ~salt_max postings in total."""
+        return max(self.block_size, self.salt_max_postings // max(1, n_map_tasks))
+
+    def _tokenized(self, df: DataFrame) -> DataFrame:
+        """Input scan -> PARTIAL_SCHEMA rows (IN FLIGHT only).
 
         ONE mapInArrow over (slice, doc_id, text): tokenize, group
         term->positions linearly (batch-level factorize + lexsort, no
-        per-doc Python beyond the tokenizer), emit positions already
-        varint-encoded. No action of its own — this plan feeds the
-        pack shuffle directly. With ``partial_salt_threshold`` the
-        output is PARTIAL_SCHEMA rows — one per (task, slice, term,
-        fld) group, salted locally once the task's cumulative count
-        for the group crosses the threshold — instead of one row per
-        posting, collapsing the pack exchange and both mapInArrow
-        boundary crossings to O(groups) rows."""
+        per-doc Python beyond the tokenizer), varint-encode positions
+        and cut the postings into partial blocks — one row per (task,
+        slice, term, fld) group and block, salted locally once the
+        task's cumulative count for the group crosses the threshold.
+        No action of its own — this plan feeds the pack shuffle
+        directly, which moves O(blocks) rows, not one per posting."""
         doc_id = self.doc_id_col()
         src = (
             df.select(
@@ -1326,92 +1168,13 @@ class IndexBuilder:
             .withColumn("slice", self._slice_col())
             .select("slice", "doc_id", *[f"f{i}" for i in range(len(self.text_cols))])
         )
-        if partial_salt_threshold is not None:
-            return src.mapInArrow(
-                _raw_postings_arrow_factory(
-                    self.store_positions, len(self.text_cols), self.analyzer,
-                    partial_salt_threshold=partial_salt_threshold,
-                    block_size=self.block_size,
-                ),
-                PARTIAL_SCHEMA,
-            )
         return src.mapInArrow(
-            _raw_postings_arrow_factory(
-                self.store_positions, len(self.text_cols), self.analyzer
+            _tokenize_partials_arrow_factory(
+                self.store_positions, len(self.text_cols), self.analyzer,
+                self.block_size, self._salt_threshold(_n_partitions(df)),
             ),
-            RAW_SCHEMA,
+            PARTIAL_SCHEMA,
         )
-
-    def _salt_plan(self, df: DataFrame | None, n_rows: int | None = None) -> DataFrame:
-        """Heavy-hitter salting plan: a tiny (term, fld, n_salts) table,
-        broadcast-joined pre-shuffle so no reducer materializes a full
-        Zipf-head posting list. Used by the RAW-ROW pack path only
-        (compaction / retention rewrites, where live generations make
-        the dictionary branch exact and job-cheap); the fused BUILD
-        decides salting inside its map tasks since r6 (local cumulative
-        threshold, _emit_partials) and never calls this. The sample
-        branch (first build, no dictionary) estimates df from a ~1%
-        token sample (occurrence counts upper-bound doc counts, so
-        estimation errs toward MORE salts). The plan is a performance
-        hint only: any term may be salted or not without affecting
-        packed-block or query correctness."""
-        if self._live_gens():
-            return (
-                self.dictionary_df()
-                .filter(F.col("df") > self.salt_max_postings)
-                .select(
-                    "term",
-                    "fld",
-                    F.ceil(F.col("df") / self.salt_max_postings)
-                    .cast("int")
-                    .alias("n_salts"),
-                )
-            )
-        # df(term, fld) is bounded by the input row count: when the
-        # caller already knows the count (``n_rows``, the docs stage's
-        # observed number — free), an input smaller than salt_max
-        # cannot contain a heavy term and the sample is skipped with
-        # NO job at all. Without a known count the sample itself IS
-        # the probe: a small input's 1% sample scan is as cheap as the
-        # former bounded LIMIT probe, and a large input saves one
-        # whole driver round-trip (probe job + sample job -> one
-        # sample job). For a huge FIRST bulk build the sample costs
-        # one extra text-column read — chunk bulk loads into
-        # generations + compact() to avoid it (every generation after
-        # the first plans from the dictionary).
-        if n_rows is not None and n_rows <= self.salt_max_postings:
-            return self.spark.createDataFrame(
-                [], "term string, fld int, n_salts int"
-            )
-        frac = 0.01
-        # token counts come out of the sample PRE-AGGREGATED per Arrow
-        # batch (value_counts in Arrow C++, same clean/dirty hybrid as
-        # the build tokenizer) — the groupBy exchange then carries
-        # O(distinct terms per batch) rows, never one row per token,
-        # and no per-row Python tokenizer runs on the clean rows
-        sampled = df.sample(fraction=frac, seed=42).select(
-            *[
-                F.col(c).alias(f"f{i}")
-                for i, c in enumerate(self.text_cols)
-            ]
-        ).mapInArrow(
-            _term_count_arrow_factory(len(self.text_cols), self.analyzer),
-            "term string, fld int, cnt long",
-        )
-        est = (
-            sampled.groupBy("term", "fld")
-            .agg((F.sum("cnt") / F.lit(frac)).alias("est_df"))
-            .filter(F.col("est_df") > self.salt_max_postings / 2)
-            .select(
-                "term",
-                "fld",
-                F.greatest(
-                    F.lit(1),
-                    F.ceil(F.col("est_df") / self.salt_max_postings).cast("int"),
-                ).alias("n_salts"),
-            )
-        )
-        return est
 
     def _stage_gen_dict(self, gen: int, n_docs: int | None = None):
         """Per-generation dictionary: aggregate THIS generation's packed
@@ -1591,42 +1354,26 @@ class IndexBuilder:
              "n_postings": n_postings, "seconds": time.time() - t0},
         )
 
-    def _pack_and_write(self, raw_df: DataFrame, gen: int, heavy_df: DataFrame):
-        """Shared pack tail: salt-assign, shuffle by (slice, term, fld,
-        salt), pack into blocks, write ``postings/gen=G`` and commit the
-        gen-level pack manifest with per-slice metrics. ``raw_df`` is
-        any RAW_SCHEMA plan (the fused tokenizer for a build, the block
-        unpacker for compact/prune) — the salt join stays JVM-side via
-        broadcast of the tiny heavy-term plan."""
+    def _pack_partials(self, partials: DataFrame, gen: int):
+        """The ONE pack tail of every index writer (build, compaction,
+        retention rewrite): shuffle PARTIAL_SCHEMA rows by (slice, term,
+        fld, salt), pack them into final blocks, write
+        ``postings/gen=G`` and commit the gen-level pack manifest."""
+        from pyspark.sql import Observation
+
         t0 = time.time()
-        raw = (
-            raw_df.join(F.broadcast(heavy_df), ["term", "fld"], "left")
-            .withColumn(
-                "salt",
-                F.pmod(
-                    F.xxhash64(F.lit(13), F.col("doc_id")),
-                    F.coalesce(F.col("n_salts"), F.lit(1)),
-                ).cast("int"),
-            )
-            .drop("n_salts")
-        )
         n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        packed = raw.repartition(n_shuffle, "slice", "term", "fld", "salt").mapInArrow(
-            _pack_partition_arrow_factory(self.block_size, self.store_positions),
+        packed = partials.repartition(
+            n_shuffle, "slice", "term", "fld", "salt"
+        ).mapInArrow(
+            _pack_partials_arrow_factory(self.block_size, self.store_positions),
             BLOCK_SCHEMA,
         )
-        self._write_packed(packed, gen, t0)
-
-    def _write_packed(self, packed: DataFrame, gen: int, t0: float):
-        """Shared pack-output tail: write ``postings/gen=G`` and commit
-        the gen-level pack manifest with metrics riding the write."""
         # metrics ride the write itself as an Observation — no second
         # job, no metadata re-read of the parquet we just wrote.
         # (observe cannot carry distinct aggregates or a groupBy, so the
         # term count is approximate and the per-slice breakdown is
         # replaced by the slice count; nothing downstream needed more.)
-        from pyspark.sql import Observation
-
         obs = Observation(f"pack_g{gen}_{time.time_ns()}")
         packed.observe(
             obs,
@@ -1658,51 +1405,41 @@ class IndexBuilder:
             },
         )
 
-    def _stage_pack_fused(self, df: DataFrame, gen: int):
-        """tokenize -> partial blocks -> shuffle -> pack, in ONE job
-        (the only pass over the corpus text and the only data shuffle
-        of the build). The shuffle moves PARTIAL_SCHEMA rows — one per
-        (map task, slice, term, fld) group with delta+varint payloads —
-        not one row per posting. Salting is decided INSIDE the map
-        tasks (local cumulative threshold, see _emit_partials): no
-        global heavy-term probe job runs, so the pack job is the
-        build's FIRST job over the corpus text and nothing gates it.
-        The threshold ~ salt_max_postings / n_map_tasks keeps the old
-        reducer-bound contract (an unsalted group's reducer receives
-        at most ~salt_max postings in total)."""
-        t0 = time.time()
-        try:
-            n_map = max(1, df.rdd.getNumPartitions())
-        except Exception:
-            n_map = 32
-        threshold = max(
-            self.block_size, self.salt_max_postings // n_map
+    def _repack(self, gens: list[int], keep: DataFrame, gen: int, n_slices: int):
+        """Re-pack the postings of ``gens`` whose (doc_id, gen) is in
+        ``keep`` as generation ``gen`` (compaction / retention
+        rewrite), re-slicing to ``n_slices`` when it differs from the
+        current layout. Postings are reconstructed from the packed
+        blocks (no raw table; position payloads re-sliced, never
+        decoded), semi-joined, then cut and salted map-side by the
+        build's own cut and packed by the same reducer."""
+        unpacked = (
+            self.spark.read.option("basePath", self._p("postings"))
+            .parquet(*[self._p("postings", f"gen={g}") for g in gens])
+            .select("slice", "term", "fld", "n", "doc_gaps", "tfs", "dls", "positions", "gen")
+            .mapInArrow(
+                _unpack_blocks_to_raw_factory(self.store_positions),
+                RAW_SCHEMA + ", gen int",
+            )
         )
+        # the cut runs on the semi-join's output: the scan's partitions
+        # (broadcast join) or the shuffle's (sort-merge join). Asking
+        # the joined plan itself would execute its stages, so count the
+        # larger of the two — over-counting only salts more.
         n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        packed = self._tokenized(
-            df, partial_salt_threshold=threshold
-        ).repartition(
-            n_shuffle, "slice", "term", "fld", "salt"
-        ).mapInArrow(
-            _pack_partials_arrow_factory(self.block_size, self.store_positions),
-            BLOCK_SCHEMA,
+        threshold = self._salt_threshold(max(_n_partitions(unpacked), n_shuffle))
+        raw = unpacked.join(keep, ["doc_id", "gen"], "left_semi").drop("gen")
+        if n_slices != self.n_slices:
+            raw = raw.withColumn("slice", self._slice_expr(n_slices))
+        self._pack_partials(
+            raw.mapInArrow(
+                _raw_to_partials_arrow_factory(
+                    self.block_size, self.store_positions, threshold
+                ),
+                PARTIAL_SCHEMA,
+            ),
+            gen,
         )
-        self._write_packed(packed, gen, t0)
-
-    def _unpacked_postings(self, gens: list[int]) -> DataFrame:
-        """Shuffle-ready postings reconstructed from the packed blocks
-        of ``gens`` (with a ``gen`` column), for compaction/retention
-        rewrites. Position payloads are re-sliced, never decoded."""
-        blocks = self.spark.read.option("basePath", self._p("postings")).parquet(
-            *[self._p("postings", f"gen={g}") for g in gens]
-        ).select(
-            "slice", "term", "fld", "n", "doc_gaps", "tfs", "dls", "positions", "gen"
-        )
-        return blocks.mapInArrow(
-            _unpack_blocks_to_raw_factory(self.store_positions, with_gen=True),
-            RAW_SCHEMA + ", gen int",
-        )
-
 
     def repair(self) -> dict:
         """Roll pending compaction/prune markers forward, garbage-collect
@@ -1822,7 +1559,7 @@ class IndexBuilder:
         Whole generations past the cutoff are dropped O(1) (manifest +
         directory removal — the Iceberg `days(ts)` partition-drop
         analog); boundary generations are rewritten as NEW generations:
-        filtered docs + raw postings land directly in fresh gen
+        filtered docs + re-packed postings land directly in fresh gen
         directories (invisible until their manifest commits), then a
         single atomic marker records the drop/rewrite decision and
         `_apply_pending_prune` rolls it forward — on this call or, after
@@ -1876,12 +1613,9 @@ class IndexBuilder:
             kept_ids = self.spark.read.parquet(
                 self._p("docs", f"gen={tgt}")
             ).select("doc_id")
-            filtered = (
-                self._unpacked_postings([g])
-                .drop("gen")
-                .join(kept_ids, "doc_id", "left_semi")
+            self._repack(
+                [g], kept_ids.withColumn("gen", F.lit(g)), tgt, self.n_slices
             )
-            self._pack_and_write(filtered, tgt, self._salt_plan(None))
             self._stage_gen_dict(tgt)
             pairs.append([g, tgt])
         self.fs.write_json_atomic(
@@ -2027,17 +1761,9 @@ class IndexBuilder:
         if new_n != self.n_slices:
             docs_out = docs_out.withColumn("slice", self._slice_expr(new_n))
         docs_out.write.mode("overwrite").parquet(self._p("docs", f"gen={target}"))
-        # postings reconstructed from the packed blocks (no raw table);
         # the (doc_id, gen) semi-join drops superseded duplicates'
         # postings along with their doc rows
-        merged = (
-            self._unpacked_postings(gens)
-            .join(docs_kept.select("doc_id", "gen"), ["doc_id", "gen"], "left_semi")
-            .drop("gen")
-        )
-        if new_n != self.n_slices:
-            merged = merged.withColumn("slice", self._slice_expr(new_n))
-        self._pack_and_write(merged, target, self._salt_plan(None))
+        self._repack(gens, docs_kept.select("doc_id", "gen"), target, new_n)
         self._stage_gen_dict(target)
         self.fs.write_json_atomic(
             self._compact_marker(),

@@ -115,13 +115,11 @@ def test_compact_reslices_index(spark, workdir):
     assert eng.search(sample_text[0], k=20).df.count() == 20
 
 
-def test_salt_plan_first_build_has_no_full_count_prepass(spark, workdir, monkeypatch):
-    """VERDICT r3 #8: the first-build salt plan must not run a full
-    count() over a (possibly expensively transformed) input. Since r6
-    the plan issues NO count() at all when the row count is unknown —
-    the 1% sample itself is the probe (one job instead of probe+sample)
-    — so the spy list may legitimately be empty; any count() that IS
-    issued must still sit under a GlobalLimit (bounded probe)."""
+def test_first_build_has_no_full_count_prepass(spark, workdir, monkeypatch):
+    """VERDICT r3 #8: a first build must not run a full count() over a
+    (possibly expensively transformed) input. Salting is decided inside
+    the pack job's map tasks, so the whole build issues exactly one
+    count(): the n_slices auto-sizing probe, bounded by a GlobalLimit."""
     # patch the CONCRETE class (pyspark 4 makes pyspark.sql.DataFrame an
     # abstract facade whose methods the classic implementation overrides)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -131,23 +129,27 @@ def test_salt_plan_first_build_has_no_full_count_prepass(spark, workdir, monkeyp
     idx = os.path.join(workdir, "salt_probe_idx")
     b = IndexBuilder(
         spark, idx, key_cols=["conv_id", "turn_idx"], text_col="text",
-        meta_cols=["role", "tool", "ts"], n_slices=2, block_size=8,
-        salt_max_postings=500,
+        meta_cols=["role", "tool", "ts"], block_size=8,
+        salt_max_postings=100,
     )
     df = synth_transcripts(spark, 2_000, seed=11)  # transformed lineage
     plans = []
     orig = DataFrame.count
 
     def spy(self):
-        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        # the analyzed plan: the optimizer drops a limit it can prove
+        # redundant on this small input
+        plans.append(self._jdf.queryExecution().analyzed().toString())
         return orig(self)
 
     monkeypatch.setattr(DataFrame, "count", spy)
-    plan = b._salt_plan(df)
-    assert all("GlobalLimit" in p for p in plans), plans
-    # input (2000 rows) exceeds salt_max (500): the sample path runs and
-    # the plan stays usable
-    plan.collect()
+    b.build(df)
+    monkeypatch.undo()
+    assert len(plans) == 1 and "GlobalLimit" in plans[0], plans
+    # input (2000 rows) exceeds salt_max (100): heavy terms were salted
+    salts = spark.read.parquet(idx + "/postings/gen=0").agg(F.max("salt")).first()[0]
+    assert salts > 0
+    assert SearchEngine(spark, idx).search("the", k=5).df.count() == 5
 
 
 def test_gen_ids_do_not_regress_after_full_prune(spark, workdir):

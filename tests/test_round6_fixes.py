@@ -3,9 +3,10 @@
 The optimizations are performance-only; these tests pin the invariants
 they rely on:
 
-1. The Arrow-native tokenize fast path emits postings byte-identical to
-   the per-row Python tokenizer (including null / empty / whitespace /
-   dirty-row edge cases).
+1. The Arrow-native tokenize fast path emits partial blocks that decode
+   to the same postings as the per-row Python tokenizer (including null
+   / empty / whitespace / dirty-row edge cases), and a salted build
+   decodes to exactly a per-document pure-Python reference.
 2. ``encode_grouped_records_offsets`` (the shared-buffer positions
    encoder) slices exactly like the per-group ``bytes`` encoder.
 3. The fused slice-local candidate path returns results bit-identical
@@ -22,27 +23,36 @@ import pyarrow as pa
 import pytest
 
 from aspublic_spark.index import codec
-from aspublic_spark.index.build import IndexBuilder, _raw_postings_arrow_factory
+from aspublic_spark.index.build import IndexBuilder, _tokenize_partials_arrow_factory
 from aspublic_spark.query.engine import SearchEngine
 from aspublic_spark.query.parser import parse_fts5, parse_websearch
 from aspublic_spark.tables import synth_transcripts
 
 
-def _collect_postings(factory, batch):
+def _collect_postings(factory, batch, store_positions):
+    """Decode every partial block a tokenizer factory emits into
+    per-posting tuples; also checks each block's doc bounds."""
     rows = []
     for rb in factory([batch]):
-        d = rb.to_pydict()
-        for i in range(rb.num_rows):
-            rows.append(
-                tuple(
-                    d[c][i]
-                    for c in ["slice", "doc_id", "fld", "dl", "term", "tf", "positions"]
+        for r in rb.to_pylist():
+            docs, tfs, dls, *pos = codec.unpack_block(r, store_positions)
+            assert (r["min_doc"], r["max_doc"]) == (docs[0], docs[-1])
+            assert (docs[1:] > docs[:-1]).all()
+            for i in range(docs.size):
+                rows.append(
+                    (r["slice"], int(docs[i]), r["fld"], int(dls[i]), r["term"],
+                     int(tfs[i]), pos[0][i].tolist() if pos else None)
                 )
-            )
     return sorted(rows)
 
 
-def _force_python_factory(store_positions, n_fields=1):
+def _tokenizer(store_positions, analyzer="fts5"):
+    return _tokenize_partials_arrow_factory(
+        store_positions, 1, analyzer, block_size=2, salt_threshold=3
+    )
+
+
+def _force_python_factory(store_positions):
     """Build the factory with the Arrow fast path disabled (analyzer
     name unknown to the fast-path gate, tokenizer forced to fts5)."""
     from aspublic_spark.functions import stemmer
@@ -50,9 +60,7 @@ def _force_python_factory(store_positions, n_fields=1):
     orig = stemmer.get_analyzer
     stemmer.get_analyzer = lambda name: orig("fts5")
     try:
-        return _raw_postings_arrow_factory(
-            store_positions, n_fields, analyzer="__force_python__"
-        )
+        return _tokenizer(store_positions, analyzer="__force_python__")
     finally:
         stemmer.get_analyzer = orig
 
@@ -71,23 +79,26 @@ def test_arrow_tokenize_path_matches_python_path():
         "a",
         "mixed CLEAN dirty_row here",
         "99 bottles of beer",
+        "the table the end",
     ]
     n = len(texts)
+    # doc ids run against row order: the cut must sort them itself
+    doc_ids = np.random.default_rng(1).permutation(n).astype(np.int64) * 1000 - 5000
     batch = pa.record_batch(
         [
-            pa.array(np.arange(n) % 4, type=pa.int32()),
-            pa.array(np.arange(n, dtype=np.int64), type=pa.int64()),
+            pa.array(np.arange(n) % 2, type=pa.int32()),
+            pa.array(doc_ids, type=pa.int64()),
             pa.array(texts, type=pa.string()),
         ],
         names=["slice", "doc_id", "f0"],
     )
     for store_positions in (True, False):
-        new = _collect_postings(
-            _raw_postings_arrow_factory(store_positions, 1, "fts5"), batch
+        new = _collect_postings(_tokenizer(store_positions), batch, store_positions)
+        old = _collect_postings(
+            _force_python_factory(store_positions), batch, store_positions
         )
-        old = _collect_postings(_force_python_factory(store_positions), batch)
         assert new == old
-        assert new  # non-vacuous
+        assert ("the" in {r[4] for r in new}) and len(new) > 20  # non-vacuous
 
 
 def test_grouped_records_offsets_match_bytes_encoder():
@@ -137,58 +148,72 @@ def test_fused_path_bit_identical_to_staged(spark, fused_idx):
     assert nonzero >= 8  # the comparisons are non-vacuous
 
 
-def test_partial_block_build_equals_raw_row_build(spark, workdir):
-    """The build's partial-block shuffle format must produce an index
-    content-identical to the raw-posting-row path (which compaction
-    still uses): same dictionary, same stats, same decoded postings
-    (salt/block layout may differ — salt is a shuffle key only)."""
+def test_partial_block_build_matches_python_reference(spark, workdir):
+    """A salted partial-block build decodes to exactly what a
+    per-document pure-Python reference computes from the same corpus
+    (fts5 tokens -> (doc_id, fld, term, tf, dl, positions)): same
+    postings, dictionary and stats. Salting is a shuffle key only, so
+    an unsalted build answers queries identically."""
+    from collections import Counter, defaultdict
+
     import aspublic_spark.index.build as B
+    import pyspark.sql.functions as F
+    from aspublic_spark.functions.stemmer import get_analyzer
 
     df = synth_transcripts(spark, 3000, seed=42)
 
-    def build(idx, use_partial):
+    def build(idx, salt_max):
         shutil.rmtree(idx, ignore_errors=True)
         b = B.IndexBuilder(
-            spark, idx, n_slices=4, block_size=32, salt_max_postings=300
+            spark, idx, n_slices=4, block_size=32, salt_max_postings=salt_max
         )
-        if use_partial:
-            b.build(df)
-            return b
-        orig = B.IndexBuilder._stage_pack_fused
-
-        def legacy(self, d, gen, n_rows=None, heavy=None):
-            self._pack_and_write(
-                self._tokenized(d), gen, self._salt_plan(d, n_rows=n_rows)
-            )
-
-        B.IndexBuilder._stage_pack_fused = legacy
-        try:
-            b.build(df)
-        finally:
-            B.IndexBuilder._stage_pack_fused = orig
+        b.build(df)
         return b
 
-    new_idx = os.path.join(workdir, "r6_partial_new")
-    old_idx = os.path.join(workdir, "r6_partial_old")
-    bn, bo = build(new_idx, True), build(old_idx, False)
-    assert sorted(bn.dictionary_df().collect()) == sorted(bo.dictionary_df().collect())
-    assert B.read_stats(new_idx) == B.read_stats(old_idx)
-    import pyspark.sql.functions as F
+    idx = os.path.join(workdir, "r6_partial_new")
+    b = build(idx, 300)
 
-    def postings(idx):
-        blocks = spark.read.option("basePath", idx + "/postings").parquet(
-            idx + "/postings/gen=0"
-        )
-        return sorted(SearchEngine(spark, idx).unpack(blocks, with_positions=True).collect())
+    tokenize = get_analyzer("fts5")
+    want_post, want_dict = set(), defaultdict(lambda: [0, 0, 0, 1 << 30])
+    n_docs = total_tokens = 0
+    for r in df.select(b.doc_id_col().alias("doc_id"), "text").collect():
+        toks = tokenize(r["text"] or "")
+        n_docs += 1
+        total_tokens += len(toks)
+        where = defaultdict(list)
+        for p, t in enumerate(toks):
+            where[t].append(p)
+        for t, ps in where.items():
+            want_post.add((r["doc_id"], 0, t, len(ps), len(toks), tuple(ps)))
+            d = want_dict[(t, 0)]
+            d[0] += 1
+            d[1] += len(ps)
+            d[2] = max(d[2], len(ps))
+            d[3] = min(d[3], len(toks))
 
-    assert postings(new_idx) == postings(old_idx)
+    blocks = spark.read.parquet(idx + "/postings/gen=0")
+    got = [
+        (r["doc_id"], r["fld"], r["term"], r["tf"], r["dl"], tuple(r["positions"]))
+        for r in SearchEngine(spark, idx).unpack(blocks, with_positions=True).collect()
+    ]
+    assert len(got) == len(set(got)) and set(got) == want_post
+    assert Counter(r[2] for r in got)["the"] > 300  # heavy term, salted
+    assert {
+        (r["term"], r["fld"]): [r["df"], r["cf"], r["max_tf"], r["min_dl"]]
+        for r in b.dictionary_df().collect()
+    } == dict(want_dict)
+    (st,) = B.read_stats(idx)
+    assert (st["n_docs"], st["total_tokens"]) == (n_docs, total_tokens)
+    assert abs(st["avgdl"] - total_tokens / n_docs) < 1e-12
     # heavy-term salting engaged through the task-id scheme
-    mx = spark.read.parquet(new_idx + "/postings/gen=0").agg(F.max("salt")).first()[0]
-    assert mx is not None and mx > 0
+    assert blocks.agg(F.max("salt")).first()[0] > 0
+    plain_idx = os.path.join(workdir, "r6_partial_unsalted")
+    build(plain_idx, 10**9)
+    assert spark.read.parquet(plain_idx + "/postings").agg(F.max("salt")).first()[0] == 0
     for q in ["zebra", "the data", '"the the"']:
         assert (
-            SearchEngine(spark, new_idx).search(q, k=50).df.collect()
-            == SearchEngine(spark, old_idx).search(q, k=50).df.collect()
+            SearchEngine(spark, idx).search(q, k=50).df.collect()
+            == SearchEngine(spark, plain_idx).search(q, k=50).df.collect()
         )
 
 
