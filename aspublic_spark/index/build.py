@@ -883,8 +883,8 @@ class IndexBuilder:
         corpus volume (~1M docs per slice, floor 8, cap 4096; bounded
         LIMIT probe so small inputs never pay a count pass). Slices are
         the doc-hash partitions of the index and the ONLY co-location
-        key a phrase match can shuffle packed blocks by (see engine.py
-        _phrase_match_factory), so they cap phrase parallelism AND set
+        key a query can shuffle packed blocks by (see engine.py
+        _fused_score_factory), so they cap query parallelism AND set
         the per-task decoded-positions memory unit (~24B per
         phrase-term occurrence in a slice; 1M docs x ~20 tokens with a
         20% Zipf head ~= 100MB decoded per task). Sizing is by VOLUME,

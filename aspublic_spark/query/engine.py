@@ -1,16 +1,19 @@
 """BM25 query engine over the packed inverted index.
 
 Executes the reference's whole search surface (viewer.py
-``/api/unstable/search`` -> db_sqlite.search, db_sqlite.py:62-144) as
-DataFrame plans:
+``/api/unstable/search`` -> db_sqlite.search, db_sqlite.py:62-144)
+through ONE evaluator. Every query — single term, AND (Q2), NOT (Q3),
+phrase (Q4), OR groups (Q5, websearch backend), NEAR, ``^`` anchors,
+column filters, prefixes and raw-FTS5 boolean trees — compiles on the
+driver to a per-doc mask program (presence leaves per (term or virtual
+``stem*`` term, field set); phrase / anchor / NEAR / prefix-phrase
+window leaves; and / or / not nodes). The query terms' PACKED blocks
+are repartitioned by ``slice`` (the doc-hash partition of the index,
+so every term's postings for one doc land in the same task), and one
+``mapInArrow`` pass decodes them, scores Okapi BM25 k1=1.2 b=0.75
+(Q11, the latent capability of the FTS5 index the reference builds)
+and evaluates the program; see :func:`_fused_score_factory`.
 
-- boolean AND of terms      -> posting intersection (groupBy doc +
-  distinct-term count, Q2)
-- NOT terms                 -> anti-join (Q3)
-- phrase queries            -> position-adjacency join chain over
-  decoded position arrays (Q4) — JVM-side array_contains, no UDF
-- OR groups                 -> union semantics with per-group
-  any-match qualification (Q5, websearch backend)
 - tri-state role/tool, time range, conv_id prefix -> pushed-down
   structured predicates on the docs table (Q6-Q8)
 - index->row join           -> final join of scored doc ids back to
@@ -19,8 +22,6 @@ DataFrame plans:
   orderBy(...).limit(k), by BM25 (score desc, key asc — deterministic
   tie-break, stricter than the reference's scan-order ties) or by
   recency like the reference default (Q10, db_sqlite.py:131)
-- scoring                   -> Okapi BM25 k1=1.2 b=0.75 (Q11), the
-  latent capability of the FTS5 index the reference builds
 
 plus block-max pruning (north_rule): packed blocks carry
 (min_doc, max_doc, max_tf, min_dl); the engine reads block
@@ -41,14 +42,12 @@ import os
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aspublic_spark import BM25_B, BM25_K1
 from aspublic_spark.index import codec
 from aspublic_spark.index.build import (
-    bm25_weight_col,
     dictionary_location,
     live_gen_paths,
     read_stats,
@@ -177,233 +176,138 @@ def _unpack_arrow_factory(with_positions: bool):
     return unpack
 
 
-def _decode_positions_by_term(batches):
-    """Decode PACKED position blocks into per-term occurrence arrays:
-    term -> (doc_ids, flds, abs_positions), all int64 numpy.
-
-    Fully vectorized: per block, positions decode in one varint pass
-    with record boundaries derived from the tfs column (record k is
-    [n=tf_k, first, deltas...]), absolute positions via grouped cumsum.
-    Shared by the phrase and NEAR matchers."""
-    from collections import defaultdict
-
-    per = defaultdict(lambda: ([], [], []))  # term -> (docs, flds, pos)
-    for pdf in batches:
-        for row in pdf.itertuples(index=False):
-            r = row._asdict()
-            ids = codec.delta_decode_docs(r["doc_gaps"])
-            if ids.size == 0:
-                continue
-            tfs = codec.decode_varints(r["tfs"]).astype(np.int64)
-            flat = codec.decode_varints(r["positions"]).astype(np.int64)
-            # vectorized record split: header positions from tfs
-            lens = tfs + 1
-            hstart = np.zeros(lens.size, dtype=np.int64)
-            np.cumsum(lens[:-1], out=hstart[1:])
-            keep = np.ones(flat.size, dtype=bool)
-            keep[hstart] = False  # drop the n_pos headers
-            vals = flat[keep]
-            c = np.cumsum(vals)
-            vstart = np.zeros(tfs.size, dtype=np.int64)
-            np.cumsum(tfs[:-1], out=vstart[1:])
-            base = np.where(vstart > 0, c[vstart - 1], 0)
-            abs_pos = c - np.repeat(base, tfs)  # grouped cumsum
-            if abs_pos.size and int(abs_pos.max()) >= (1 << 24):
-                raise RuntimeError(
-                    "position exceeds 2^24 (16M tokens in one field "
-                    "of one doc) — positional key packing would overflow"
-                )
-            d, f, p = per[r["term"]]
-            d.append(np.repeat(ids, tfs))
-            f.append(np.full(abs_pos.size, int(r["fld"]), dtype=np.int64))
-            p.append(abs_pos)
-    return {t: tuple(np.concatenate(x) for x in v) for t, v in per.items()}
+# -- the evaluator: one mask program per query ---------------------------
+# A program is nested tuples (pure picklable data). Leaves read the
+# partition's rows; ``flds`` is a sorted field-ordinal tuple, or None for
+# every field; ``neg`` selects the NOT-side rows (blocks tagged ``_neg``):
+#   ("has", label, flds, neg)            label has a posting in flds
+#   ("phrase", slots, flds, neg, anchored)
+#   ("near", ops, flds, neg, span)       ops = tuple of slot tuples
+# A slot is a tuple of member terms (an expanded prefix: ANY member fills
+# it); a label is a term or a virtual prefix term ``stem*``. Nodes:
+#   ("and", *kids) ("or", *kids) ("not", left, right) ("unot", kid)
+#   ("true",) ("false",)
+_BOOL_KINDS = ("and", "or", "not", "unot")
 
 
-def _near_match_factory(operands: list, n: int):
-    """mapInPandas fn over PACKED blocks of the NEAR group's terms (one
-    partition holds complete doc-hash slices): emit doc_ids where ONE
-    occurrence of each DISTINCT operand PHRASE can be chosen within a
-    single field such that max(start) - min(end) <= n + 1 over the
-    chosen occurrence intervals [start, end] (end = start + len - 1).
-
-    That is FTS5's observable ``NEAR(p1 .. pk, n)`` semantics — pinned
-    by randomized live-FTS5 differentials (tests): for single-token
-    operands it reduces to the previously pinned max(pos) - min(pos)
-    <= n + 1 (k-independent, NOT the documented span formula); phrase
-    operands contribute their occurrence INTERVALS; duplicate operands
-    collapse (NEAR(a a, 0) matches a lone 'a'); matching never spans
-    columns; the default n is 10 (parser).
-
-    Vectorized: occurrences pack into the same int64 keys as the
-    phrase matcher (doc ordinal << 32 | fld << 24 | pos); a phrase
-    operand's occurrence-START key set is the same offset-corrected
-    np.intersect1d chain the phrase matcher runs. Every operand
-    occurrence's END key is a candidate for min(end) (the chosen
-    minimum end is always one of them); at anchor e, operand i (length
-    L) matches iff it has a start in [e - L + 1, e + n + 1] within the
-    same (doc, fld) group — one searchsorted per operand over the
-    partition's anchors, no per-occurrence Python. The window lower
-    bound clamps to the group base (a phrase near position 0 must not
-    probe into the previous group); overflow past the upper bound into
-    the next field ordinal is impossible: positions cap at 2^24-1 and
-    the explicit group-equality check rejects cross-field hits."""
-    def _norm(op):
-        if isinstance(op, str):
-            return ((op,),)
-        return tuple(
-            (sl,) if isinstance(sl, str) else tuple(sl) for sl in op
-        )
-
-    # operand = tuple of SLOTS, slot = tuple of member terms (a plain
-    # token is a 1-member slot; an expanded prefix marker is the stem's
-    # dictionary expansion — ANY member fills the slot, exactly like
-    # the phrase matcher's list slots)
-    uniq = list(dict.fromkeys(_norm(op) for op in operands))
-    span = int(n) + 1
-
-    def run(batches):
-        cat = _decode_positions_by_term(batches)
-        docs = _near_set_from_cat(cat, uniq, span)
-        yield pd.DataFrame({"doc_id": docs})
-
-    return run
+def _and(*kids) -> tuple:
+    return kids[0] if len(kids) == 1 else ("and", *kids) if kids else ("true",)
 
 
-def _near_set_from_cat(cat: dict, uniq: list, span: int) -> np.ndarray:
-    """NEAR evaluation over a per-partition occurrence catalog
-    (term -> (docs, flds, positions)); returns the matching doc ids.
-    Shared by the standalone NEAR matcher and the fused scoring pass
-    (both are slice-complete, so the partition-local result is exact)."""
-    empty = np.empty(0, dtype=np.int64)
-    live_ops = []
-    for op in uniq:
-        slots = []
-        for sl in op:
-            members = [t for t in sl if t in cat]
-            if not members:
-                return empty
-            slots.append(members)
-        live_ops.append(slots)
-    allterms = sorted({t for op in live_ops for sl in op for t in sl})
-    alldocs = np.unique(np.concatenate([cat[t][0] for t in allterms]))
+def _or(*kids) -> tuple:
+    return kids[0] if len(kids) == 1 else ("or", *kids) if kids else ("false",)
 
-    def keys(t: str, off: int) -> np.ndarray:
+
+def _prog_leaves(node: tuple):
+    if node[0] in _BOOL_KINDS:
+        for kid in node[1:]:
+            yield from _prog_leaves(kid)
+    elif node[0] not in ("true", "false"):
+        yield node
+
+
+def _window_terms(leaf: tuple) -> set:
+    slots = leaf[1] if leaf[0] == "phrase" else [sl for op in leaf[1] for sl in op]
+    return {t for sl in slots for t in sl}
+
+
+def _live_slots(cat: dict, slots) -> list | None:
+    """Slots restricted to members present in the catalog; None when a
+    slot has no member here (the window cannot match)."""
+    out = []
+    for sl in slots:
+        members = [t for t in sl if t in cat]
+        if not members:
+            return None
+        out.append(members)
+    return out
+
+
+def _slot_keys(cat: dict, alldocs: np.ndarray, members: list, off: int) -> np.ndarray:
+    """Sorted unique packed occurrence keys of a slot's member terms:
+    doc ordinal (in ``alldocs``) << 32 | fld << 24 | (pos - off). The
+    offset aligns slot ``off`` of a window with its first token, so a
+    phrase match is an intersection of its slots' key sets."""
+    parts = []
+    for t in members:
         d, f, p = cat[t]
         ok = p >= off
         o = np.searchsorted(alldocs, d[ok])
-        return np.unique((o << 32) | (f[ok] << 24) | (p[ok] - off))
+        parts.append((o << 32) | (f[ok] << 24) | (p[ok] - off))
+    return np.unique(np.concatenate(parts))
 
-    def slot_keys(members: list, off: int) -> np.ndarray:
-        if len(members) == 1:
-            return keys(members[0], off)
-        return np.unique(np.concatenate([keys(t, off) for t in members]))
 
-    starts = {}
-    for i, op in enumerate(live_ops):
-        ks = slot_keys(op[0], 0)
+def _catalog_docs(cat: dict, live: list) -> np.ndarray:
+    return np.unique(
+        np.concatenate([cat[t][0] for t in sorted({t for m in live for t in m})])
+    )
+
+
+def _near_set_from_cat(cat: dict, uniq: tuple, span: int) -> np.ndarray:
+    """Docs matching FTS5 ``NEAR(p1 .. pk, n)`` (``span`` = n + 1) over
+    an occurrence catalog (term -> (docs, flds, positions)) of
+    slice-complete rows, so the partition-local result is exact.
+
+    Semantics pinned by randomized live-FTS5 differentials: ONE
+    occurrence of each DISTINCT operand phrase (``uniq`` is already
+    deduplicated — NEAR(a a, 0) matches a lone 'a') can be chosen within
+    a single field such that max(start) - min(end) <= n + 1 over the
+    chosen intervals [start, end]; matching never spans columns.
+
+    Every operand occurrence's END key is a candidate for min(end): at
+    anchor e, operand i (length L) matches iff it has a start in
+    [e - L + 1, e + n + 1] within the same (doc, fld) group — one
+    searchsorted per operand, no per-occurrence Python. The lower bound
+    clamps to the group base; overflow past the upper bound into the
+    next field is rejected by the explicit group-equality check."""
+    empty = np.empty(0, dtype=np.int64)
+    live_ops = []
+    for op in uniq:
+        live = _live_slots(cat, op)
+        if live is None:
+            return empty
+        live_ops.append(live)
+    alldocs = _catalog_docs(cat, [m for op in live_ops for m in op])
+    starts = []
+    for op in live_ops:
+        ks = _slot_keys(cat, alldocs, op[0], 0)
         for off in range(1, len(op)):
             if ks.size == 0:
                 break
-            ks = np.intersect1d(ks, slot_keys(op[off], off), assume_unique=True)
+            ks = np.intersect1d(
+                ks, _slot_keys(cat, alldocs, op[off], off), assume_unique=True
+            )
         if ks.size == 0:
             return empty
-        starts[i] = ks
+        starts.append(ks)
     anchors = np.unique(
-        np.concatenate(
-            [starts[i] + (len(op) - 1) for i, op in enumerate(live_ops)]
-        )
+        np.concatenate([ks + (len(op) - 1) for ks, op in zip(starts, live_ops)])
     )
     ok = np.ones(anchors.size, dtype=bool)
     grp = anchors >> 24  # (doc ordinal, fld)
     base = grp << 24
-    for i, op in enumerate(live_ops):
-        ks = starts[i]
+    for ks, op in zip(starts, live_ops):
         lo = np.maximum(anchors - (len(op) - 1), base)
         idx = np.searchsorted(ks, lo)
         hit = idx < ks.size
         v = ks[np.minimum(idx, ks.size - 1)]
         ok &= hit & (v <= anchors + span) & ((v >> 24) == grp)
-    return (
-        alldocs[np.unique(anchors[ok] >> 32)]
-        if ok.any()
-        else empty
-    )
+    return alldocs[np.unique(anchors[ok] >> 32)] if ok.any() else empty
 
 
-def _phrase_match_factory(phrase: list[str], anchored: bool = False):
-    """mapInPandas fn over PACKED blocks of the phrase's terms (one
-    partition holds complete doc-hash slices): emit doc_ids where the
-    phrase occurs adjacently within a single field.
-
-    Fully vectorized: per block, positions decode in one varint pass
-    with record boundaries derived from the tfs column (record k is
-    [n=tf_k, first, deltas...]), absolute positions via grouped cumsum;
-    per partition, each term's (doc, fld, pos-offset) triples pack into
-    int64 keys (doc ordinal << 32 | fld << 24 | pos) and the phrase
-    match is a chain of np.intersect1d — no per-posting Python, no
-    decoded-array shuffle. A doc's blocks for ALL terms share its slice
-    (slice = hash(doc_id)), so matches never span partitions and the
-    output needs no distinct.
-
-    Scale note: slice is the ONLY co-location key derivable from block
-    metadata (doc ids are hashes, so block doc-ranges span the whole
-    id space and cannot sub-partition), which makes n_slices the
-    phrase-match parallelism ceiling AND the per-task memory unit
-    (~24B per phrase-term posting occurrence in the slice). Size
-    n_slices at build time so one slice's Zipf-head positions fit an
-    executor: hundreds-to-thousands of slices at 100 TB, not the
-    single-digit defaults used for local tests.
-
-    A slot may be a LIST of terms (FTS5 prefix phrase ``"a b"*``: the
-    last slot is the stem's dictionary expansion) — its occurrence set
-    is the union of its members', so ANY member extends the phrase.
-    Slice co-location still holds per member term, so the partition-
-    local match stays exact."""
-    terms = list(phrase)
-
-    def run(batches):
-        cat = _decode_positions_by_term(batches)
-        docs = _phrase_set_from_cat(cat, terms, anchored)
-        yield pd.DataFrame({"doc_id": docs})
-
-    return run
-
-
-def _phrase_set_from_cat(cat: dict, terms: list, anchored: bool) -> np.ndarray:
-    """Phrase/anchor evaluation over a per-partition occurrence catalog
-    (term -> (docs, flds, positions)); returns the matching doc ids.
-    Shared by the standalone phrase matcher and the fused scoring pass
-    (both are slice-complete, so the partition-local result is exact)."""
+def _phrase_set_from_cat(cat: dict, slots: tuple, anchored: bool) -> np.ndarray:
+    """Docs where the phrase occurs adjacently within a single field,
+    over an occurrence catalog of slice-complete rows (a doc's rows for
+    every term share its slice = hash(doc_id), so the partition-local
+    match is exact). ``anchored``: FTS5 ``^`` — the window must start
+    its column (position 0 of any field)."""
     empty = np.empty(0, dtype=np.int64)
-    # a str slot absent from this partition's slices -> no match
-    # here; a list slot needs at least one member present
-    live_slots: list[list[str]] = []
-    for slot in terms:
-        members = [slot] if isinstance(slot, str) else [
-            t for t in slot if t in cat
-        ]
-        if isinstance(slot, str) and slot not in cat:
-            members = []
-        if not members:
-            return empty
-        live_slots.append(members)
-    allterms = sorted({t for m in live_slots for t in m})
-    alldocs = np.unique(np.concatenate([cat[t][0] for t in allterms]))
-
-    def keys(t: str, off: int) -> np.ndarray:
-        d, f, p = cat[t]
-        ok = p >= off
-        o = np.searchsorted(alldocs, d[ok])
-        return np.unique((o << 32) | (f[ok] << 24) | (p[ok] - off))
-
-    def slot_keys(members: list[str], off: int) -> np.ndarray:
-        if len(members) == 1:
-            return keys(members[0], off)
-        return np.unique(np.concatenate([keys(t, off) for t in members]))
-
+    live = _live_slots(cat, slots)
+    if live is None:
+        return empty
+    alldocs = _catalog_docs(cat, live)
     ks = sorted(
-        (slot_keys(m, off) for off, m in enumerate(live_slots)),
+        (_slot_keys(cat, alldocs, m, off) for off, m in enumerate(live)),
         key=lambda a: a.size,
     )
     cur = ks[0]
@@ -412,48 +316,50 @@ def _phrase_set_from_cat(cat: dict, terms: list, anchored: bool) -> np.ndarray:
             break
         cur = np.intersect1d(cur, nxt, assume_unique=True)
     if anchored and cur.size:
-        # FTS5 ^-anchor: the window must START the column — keep
-        # only matches whose first-token position is 0 (the packed
-        # key's low 24 bits are the offset-corrected position)
+        # the key's low 24 bits are the window's first-token position
         cur = cur[(cur & 0xFFFFFF) == 0]
-    return (
-        alldocs[np.unique(cur >> 32)]
-        if cur.size
-        else empty
-    )
+    return alldocs[np.unique(cur >> 32)] if cur.size else empty
 
 
 def _fused_score_factory(spec: dict):
-    """mapInArrow fn over slice-repartitioned PACKED blocks: unpack,
-    score, qualify and apply every positional/NOT constraint in ONE
-    Python pass, emitting the fully qualified ``(doc_id, score)``
-    candidate set.
+    """mapInArrow fn — the engine's one evaluator. Over partitions of
+    PACKED blocks that each hold complete doc-hash slices (or, for a
+    program reading a single (term, field), any split: every doc then
+    has one posting), it decodes, scores, and evaluates the query's
+    mask program in ONE Python pass, emitting the qualified
+    ``(doc_id, score)`` candidates. ``slice = hash(doc_id)`` co-locates
+    every term's postings for one doc, so the partition-local result is
+    exact.
 
-    Replaces the flat path's unpack stage + JVM groupBy-fold exchange +
-    per-phrase matcher passes + NOT anti-joins with a single stage:
-    because ``slice = hash(doc_id)`` co-locates every term's postings
-    for one doc, the partition-local evaluation is exact — the same
-    invariant the phrase matcher always relied on.
+    Candidates are the docs holding a scoring row: a positive row whose
+    (label, fld) has an entry in ``scaled`` (field weight x idf; 0.0
+    for rows scanned only for presence). Virtual prefix rows are
+    synthesized first: for each ``virtual`` label ``stem*`` -> (terms,
+    flds), one posting per (doc, fld) with tf summed over the stem's
+    expansion — FTS5's bm25 counts a prefix as one phrase.
 
-    Bit-identity with the JVM plan (north-rule rank identity): the BM25
-    weight is computed with the same elementwise double ops in the same
-    association order as ``bm25_weight_col``; per-doc contributions are
-    summed SEQUENTIALLY in the same canonical (term, fld, w) ascending
-    order as the ``array_sort``+``aggregate`` fold (the j-th item of
-    every doc's sorted run is added in iteration j — never a pairwise
-    numpy reduction, whose different association would drift last
-    ulps); UTF-8 byte order (JVM string compare) equals code-point
-    order (Python compare), so the canonical order itself is identical.
+    Scores are summed in CANONICAL (label, fld, w) order, sequentially
+    (the j-th item of every doc's sorted run is added in iteration j —
+    never a pairwise numpy reduction), so they do not depend on
+    partitioning; the weight uses the same elementwise double ops in
+    the same association order as ``bm25_weight_col``.
 
-    ``spec`` is pure picklable data:
-      need_pos, scaled {(term, fld): w}, avgdl {fld: a}, and_terms,
-      or_term_groups, mixed [(terms, [phrase])], phrases, anchors,
-      nears [(normalized ops, span)], not_terms, not_groups,
-      not_phrases.
-    """
+    ``spec`` is pure picklable data: prog, need_pos, scaled
+    {(label, fld): w}, avgdl {fld: a}, virtual {label: (terms, flds)}.
+    Theta pruning drops positive blocks only, so NOT-side presence is
+    always complete."""
     import pyarrow as pa
 
     k1p1 = BM25_K1 + 1.0
+    prog = spec["prog"]
+    leaves = list(_prog_leaves(prog))
+    has_labels = {lf[1] for lf in leaves if lf[0] == "has"}
+    win_terms = {
+        neg: sorted(
+            {t for lf in leaves if lf[0] != "has" and lf[3] == neg for t in _window_terms(lf)}
+        )
+        for neg in (False, True)
+    }
 
     def run(batches):
         batch_list = list(batches)
@@ -467,21 +373,50 @@ def _fused_score_factory(spec: dict):
         if d is None:
             return
         blk = d["blk"]
-        tcol = rb.column("term")
-        de = tcol.dictionary_encode()
+        de = rb.column("term").dictionary_encode()
         codes_b = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        tstrings = de.dictionary.to_pylist()
+        labels = de.dictionary.to_pylist()
         fld_b = rb.column("fld").to_numpy(zero_copy_only=False).astype(np.int64)
         neg_b = rb.column("_neg").to_numpy(zero_copy_only=False).astype(bool)
-        code_p = codes_b[blk]
-        fld_p = fld_b[blk]
-        neg_p = neg_b[blk]
-        doc_p, tf_p, dl_p = d["doc_id"], d["tf"], d["dl"]
-        code_of = {t: i for i, t in enumerate(tstrings)}
-        n_codes = len(tstrings)
+        # real rows (positions align with these) ...
+        real_code, real_fld, real_neg = codes_b[blk], fld_b[blk], neg_b[blk]
+        real_doc, real_tf = d["doc_id"], d["tf"]
+        code_of = {t: i for i, t in enumerate(labels)}
+
+        # ... plus one virtual "stem*" row per (doc, fld) of each stem
+        cols = [[real_code], [real_fld], [real_doc], [real_tf], [d["dl"]]]
+        for label, (terms, flds) in spec["virtual"].items():
+            cs = [code_of[t] for t in terms if t in code_of]
+            r = np.flatnonzero(~real_neg & np.isin(real_code, cs))
+            if flds is not None:
+                r = r[np.isin(real_fld[r], flds)]
+            if r.size == 0:
+                continue
+            r = r[np.lexsort((real_fld[r], real_doc[r]))]
+            vd, vf = real_doc[r], real_fld[r]
+            first = np.ones(r.size, dtype=bool)
+            first[1:] = (vd[1:] != vd[:-1]) | (vf[1:] != vf[:-1])
+            gs = np.flatnonzero(first)
+            code_of[label] = len(labels)
+            labels.append(label)
+            for col, v in zip(
+                cols,
+                (
+                    np.full(gs.size, code_of[label]),
+                    vf[gs],
+                    vd[gs],
+                    np.add.reduceat(real_tf[r], gs),
+                    d["dl"][r][gs],
+                ),
+            ):
+                col.append(v)
+        code_p, fld_p, doc_p, tf_p, dl_p = (np.concatenate(c) for c in cols)
+        neg_p = np.zeros(doc_p.size, dtype=bool)
+        neg_p[: real_neg.size] = real_neg
+        n_codes = len(labels)
         n_fld = max(spec["avgdl"]) + 1 if spec["avgdl"] else 1
 
-        # -- scoring rows: positive-polarity postings ------------------
+        # -- scoring rows ----------------------------------------------
         scale_lookup = np.full((max(n_codes, 1), n_fld), np.nan)
         for (t, f), v in spec["scaled"].items():
             c = code_of.get(t)
@@ -504,9 +439,7 @@ def _fused_score_factory(spec: dict):
 
         # -- canonical-order sequential fold per doc -------------------
         term_rank = np.empty(n_codes, dtype=np.int64)
-        term_rank[
-            np.argsort(np.asarray(tstrings, dtype=object))
-        ] = np.arange(n_codes)
+        term_rank[np.argsort(np.asarray(labels, dtype=object))] = np.arange(n_codes)
         order = np.lexsort((w, fld_p[sel], term_rank[code_p[sel]], doc_s))
         ds, ws = doc_s[order], w[order]
         gstart = np.empty(ds.size, dtype=bool)
@@ -521,39 +454,38 @@ def _fused_score_factory(spec: dict):
             m = idx_in_g == j
             score[gid[m]] = score[gid[m]] + ws[m]
 
-        # -- presence masks over docs_u --------------------------------
-        # Scoring (positive, scaled) rows already sit in the fold's doc
-        # groups, so their presence is a vectorized compare + scatter
-        # through ``gid`` — no per-term binary search (searchsorted over
-        # ~docs_u-sized term lists was HALF the evaluator on heavy AND
-        # queries). The remaining rows (NOT side, and any positive row
-        # without a scale entry) are located in docs_u with ONE shared
-        # searchsorted, then every term's mask is a compare + scatter
-        # over that precomputed position map. Bit-identical masks to
-        # the per-term search (same membership test, same docs_u).
+        # -- presence: scoring rows already sit in the fold's doc groups
+        # (a compare + scatter through ``gid``); the remaining rows that
+        # a "has" leaf reads (NOT side, unscored fields) are located in
+        # docs_u with ONE shared searchsorted
         code_sorted = code_p[sel][order]
-        rest_idx = np.flatnonzero(~sel)
-        if rest_idx.size:
-            rest_doc = doc_p[rest_idx]
-            rest_pos = np.searchsorted(docs_u, rest_doc)
-            rest_hit = rest_pos < docs_u.size
-            rest_pos_c = np.where(rest_hit, rest_pos, 0)
-            rest_hit &= docs_u[rest_pos_c] == rest_doc
-            rest_code = code_p[rest_idx]
-            rest_neg = neg_p[rest_idx]
-        else:
-            rest_pos_c = rest_hit = rest_code = rest_neg = None
+        fld_sorted = fld_p[sel][order]
+        rest_idx = np.flatnonzero(
+            ~sel & np.isin(code_p, [code_of[t] for t in has_labels if t in code_of])
+        )
+        rest_doc = doc_p[rest_idx]
+        rest_pos = np.searchsorted(docs_u, rest_doc)
+        rest_hit = rest_pos < docs_u.size
+        rest_pos = np.where(rest_hit, rest_pos, 0)
+        rest_hit &= docs_u[rest_pos] == rest_doc
+        rest_code, rest_fld, rest_neg = (
+            code_p[rest_idx], fld_p[rest_idx], neg_p[rest_idx]
+        )
 
-        def present_mask(term: str, negside: bool) -> np.ndarray:
+        def present(label: str, flds, neg: bool) -> np.ndarray:
             m = np.zeros(docs_u.size, dtype=bool)
-            c = code_of.get(term)
+            c = code_of.get(label)
             if c is None:
                 return m
-            if not negside:
-                m[gid[code_sorted == c]] = True
-            if rest_hit is not None:
-                r = (rest_code == c) & (rest_neg == negside) & rest_hit
-                m[rest_pos_c[r]] = True
+            if not neg:
+                hit = code_sorted == c
+                if flds is not None:
+                    hit &= np.isin(fld_sorted, flds)
+                m[gid[hit]] = True
+            r = (rest_code == c) & (rest_neg == neg) & rest_hit
+            if flds is not None:
+                r &= np.isin(rest_fld, flds)
+            m[rest_pos[r]] = True
             return m
 
         def mask_from_docs(docs_arr: np.ndarray) -> np.ndarray:
@@ -562,108 +494,93 @@ def _fused_score_factory(spec: dict):
                 ii = np.searchsorted(docs_u, docs_arr)
                 inb = ii < docs_u.size
                 ii, da = ii[inb], docs_arr[inb]
-                hit = docs_u[ii] == da
-                m[ii[hit]] = True
+                m[ii[docs_u[ii] == da]] = True
             return m
 
-        ok = np.ones(docs_u.size, dtype=bool)
-        for t in spec["and_terms"]:
-            ok &= present_mask(t, False)
-        for g in spec["or_term_groups"]:
-            gm = np.zeros(docs_u.size, dtype=bool)
-            for t in g:
-                gm |= present_mask(t, False)
-            ok &= gm
+        # -- occurrence catalogs for window leaves, per (side, flds) ---
+        cats: dict = {}
 
-        # -- positional constraints ------------------------------------
-        if spec["need_pos"]:
-            pos_flat = d["pos"]
-            pstart = np.zeros(tf_p.size, dtype=np.int64)
-            np.cumsum(tf_p[:-1], out=pstart[1:])
-
-            def build_cat(terms_needed, negside: bool) -> dict:
+        def catalog(neg: bool, flds) -> dict:
+            if (neg, flds) in cats:
+                return cats[(neg, flds)]
+            if flds is not None:
+                base = catalog(neg, None)
                 cat = {}
-                for t in terms_needed:
-                    c = code_of.get(t)
-                    if c is None:
-                        continue
-                    ridx = np.flatnonzero((code_p == c) & (neg_p == negside))
-                    if ridx.size == 0:
-                        continue
-                    tf_r = tf_p[ridx]
-                    tot = int(tf_r.sum())
-                    excl = np.zeros(ridx.size, dtype=np.int64)
-                    np.cumsum(tf_r[:-1], out=excl[1:])
-                    gather = (
-                        np.repeat(pstart[ridx], tf_r)
-                        + np.arange(tot, dtype=np.int64)
-                        - np.repeat(excl, tf_r)
-                    )
-                    pos_occ = pos_flat[gather]
-                    if pos_occ.size and int(pos_occ.max()) >= (1 << 24):
-                        raise RuntimeError(
-                            "position exceeds 2^24 (16M tokens in one "
-                            "field of one doc) — positional key packing "
-                            "would overflow"
-                        )
-                    cat[t] = (
-                        np.repeat(doc_p[ridx], tf_r),
-                        np.repeat(fld_p[ridx], tf_r),
-                        pos_occ,
-                    )
+                for t, arrs in base.items():
+                    keep = np.isin(arrs[1], flds)
+                    if keep.any():
+                        cat[t] = tuple(a[keep] for a in arrs)
+                cats[(neg, flds)] = cat
                 return cat
-
-            def _flat_terms(slots):
-                return {
-                    t
-                    for sl in slots
-                    for t in ([sl] if isinstance(sl, str) else sl)
-                }
-
-            pos_terms = set()
-            for ph in spec["phrases"] + spec["anchors"]:
-                pos_terms |= _flat_terms(ph)
-            for ops, _sp in spec["nears"]:
-                for op in ops:
-                    pos_terms |= _flat_terms(op)
-            for _tg, pgs in spec["mixed"]:
-                for ph in pgs:
-                    pos_terms |= _flat_terms(ph)
-            pos_cat = build_cat(sorted(pos_terms), False) if pos_terms else {}
-            for ph in spec["phrases"]:
-                ok &= mask_from_docs(_phrase_set_from_cat(pos_cat, list(ph), False))
-            for ph in spec["anchors"]:
-                ok &= mask_from_docs(_phrase_set_from_cat(pos_cat, list(ph), True))
-            for ops, sp in spec["nears"]:
-                ok &= mask_from_docs(_near_set_from_cat(pos_cat, ops, sp))
-            for tg, pgs in spec["mixed"]:
-                gm = np.zeros(docs_u.size, dtype=bool)
-                for t in tg:
-                    gm |= present_mask(t, False)
-                for ph in pgs:
-                    gm |= mask_from_docs(
-                        _phrase_set_from_cat(pos_cat, list(ph), False)
+            pos_flat = d["pos"]
+            pstart = np.zeros(real_tf.size, dtype=np.int64)
+            np.cumsum(real_tf[:-1], out=pstart[1:])
+            cat = {}
+            for t in win_terms[neg]:
+                c = code_of.get(t)
+                if c is None:
+                    continue
+                ridx = np.flatnonzero((real_code == c) & (real_neg == neg))
+                if ridx.size == 0:
+                    continue
+                tf_r = real_tf[ridx]
+                excl = np.zeros(ridx.size, dtype=np.int64)
+                np.cumsum(tf_r[:-1], out=excl[1:])
+                gather = (
+                    np.repeat(pstart[ridx], tf_r)
+                    + np.arange(int(tf_r.sum()), dtype=np.int64)
+                    - np.repeat(excl, tf_r)
+                )
+                pos_occ = pos_flat[gather]
+                if pos_occ.size and int(pos_occ.max()) >= (1 << 24):
+                    raise RuntimeError(
+                        "position exceeds 2^24 (16M tokens in one field of "
+                        "one doc) — positional key packing would overflow"
                     )
-                ok &= gm
-            if spec["not_phrases"]:
-                neg_terms = set()
-                for ph in spec["not_phrases"]:
-                    neg_terms |= _flat_terms(ph)
-                neg_cat = build_cat(sorted(neg_terms), True)
-                for ph in spec["not_phrases"]:
-                    ok &= ~mask_from_docs(
-                        _phrase_set_from_cat(neg_cat, list(ph), False)
+                cat[t] = (
+                    np.repeat(real_doc[ridx], tf_r),
+                    np.repeat(real_fld[ridx], tf_r),
+                    pos_occ,
+                )
+            cats[(neg, None)] = cat
+            return cat
+
+        # -- evaluate the program --------------------------------------
+        memo: dict = {}
+
+        def ev(node: tuple) -> np.ndarray:
+            kind = node[0]
+            if kind == "and":
+                m = np.ones(docs_u.size, dtype=bool)
+                for kid in node[1:]:
+                    m &= ev(kid)
+                    if not m.any():
+                        break
+                return m
+            if kind == "or":
+                m = np.zeros(docs_u.size, dtype=bool)
+                for kid in node[1:]:
+                    m |= ev(kid)
+                return m
+            if kind == "not":
+                return ev(node[1]) & ~ev(node[2])
+            if kind == "unot":
+                return ~ev(node[1])
+            if kind in ("true", "false"):
+                return np.full(docs_u.size, kind == "true")
+            if node not in memo:
+                if kind == "has":
+                    memo[node] = present(node[1], node[2], node[3])
+                else:
+                    cat = catalog(node[3], node[2])
+                    memo[node] = mask_from_docs(
+                        _phrase_set_from_cat(cat, node[1], node[4])
+                        if kind == "phrase"
+                        else _near_set_from_cat(cat, node[1], node[4])
                     )
+            return memo[node]
 
-        # -- NOT exclusions --------------------------------------------
-        for t in spec["not_terms"]:
-            ok &= ~present_mask(t, True)
-        for g in spec["not_groups"]:
-            gm = np.ones(docs_u.size, dtype=bool)
-            for t in g:
-                gm &= present_mask(t, True)
-            ok &= ~gm
-
+        ok = ev(prog)
         out_d = docs_u[ok]
         if out_d.size:
             yield pa.record_batch(
@@ -784,20 +701,6 @@ def _leaf_stems(leaf: Node) -> tuple:
     return tuple(sl[1] for sl in leaf.toks if isinstance(sl, tuple))
 
 
-def _tree_positional_key(leaf: Node):
-    """Identity of a positional leaf (shared flag column per distinct
-    phrase/NEAR/anchor/prefix-phrase across the tree)."""
-    if leaf.kind == "phrase" and len(leaf.toks) > 1:
-        return ("phrase", leaf.toks)
-    if leaf.kind == "near":
-        return ("near", leaf.toks, leaf.n)
-    if leaf.kind == "anchor":
-        return ("anchor", leaf.toks)
-    if leaf.kind == "prefix_phrase":
-        return ("pp", leaf.toks, leaf.stem)
-    return None
-
-
 @dataclass
 class SearchResult:
     df: DataFrame
@@ -896,10 +799,6 @@ class SearchEngine:
         # fall back to the shuffle join)
         self.broadcast_cand_max_postings = 1_000_000
         self._cache = cache_tables
-        # internal escape hatch for A/B-testing the fused slice-local
-        # candidate path against the staged plan (results are identical;
-        # tests assert bit-equality through both)
-        self._fused = True
         self._docs_df = None
         self._dict_df = None
         self._blocks_df = None
@@ -1124,50 +1023,6 @@ class SearchEngine:
             d = d.filter(extra_filter)  # arbitrary predicate on docs meta
         return d
 
-    # -- phrase evaluation (Q4) ----------------------------------------
-    def _phrase_docs(self, phrase: list[str], blocks: DataFrame) -> DataFrame:
-        """Docs where the phrase occurs adjacently within a SINGLE field
-        (FTS5 phrases never span columns).
-
-        Evaluated over the PACKED blocks: the phrase terms' blocks are
-        shuffled by ``slice`` (the doc-hash partition of the index, so
-        every term's postings for one doc land in the same task) still
-        varint-COMPRESSED — the heaviest column in the index never
-        crosses an exchange decoded — and one mapInPandas decodes +
-        intersects positions entirely in vectorized numpy. This
-        replaced a per-(doc,fld) DataFrame self-join of decoded
-        array<int> position columns (Arrow list transfer + join shuffle
-        of the arrays dominated q_phrase, ~2.6x q_and at sf0.1).
-
-        A slot may be a LIST of terms (prefix phrase ``"a b"*``: the
-        stem's expansion) — any member extends the phrase."""
-        flat = sorted(
-            {t for s in phrase for t in ([s] if isinstance(s, str) else s)}
-        )
-        pb = blocks.filter(F.col("term").isin(flat)).select(
-            "slice", "term", "fld", "doc_gaps", "tfs", "positions"
-        )
-        return pb.repartition("slice").mapInPandas(
-            _phrase_match_factory(list(phrase)), "doc_id long"
-        )
-
-    def _anchor_docs(self, phrase: list, blocks: DataFrame) -> DataFrame:
-        """Docs matching FTS5's ``^``-anchor (``^term`` / ``^"a b"``):
-        the term/phrase occurs at the very START of a column (live
-        probe: position 0 of ANY indexed field qualifies). Same packed-
-        block plan as a phrase; the matcher just keeps windows whose
-        first-token position is 0. A slot may be a LIST of terms (an
-        expanded prefix marker — ``^tw*`` is probed valid FTS5)."""
-        flat = sorted(
-            {t for sl in phrase for t in ([sl] if isinstance(sl, str) else sl)}
-        )
-        pb = blocks.filter(F.col("term").isin(flat)).select(
-            "slice", "term", "fld", "doc_gaps", "tfs", "positions"
-        )
-        return pb.repartition("slice").mapInPandas(
-            _phrase_match_factory(list(phrase), anchored=True), "doc_id long"
-        )
-
     def _resolve_col_filters(self, pq: ParsedQuery):
         """Resolve column filters (``col:``, ``{a b}:``, ``-col:``,
         ``-{a b}:``) to allowed field-ordinal SETS.
@@ -1287,28 +1142,6 @@ class SearchEngine:
                 self._prefix_cache[s] = exp
         return {s: self._prefix_cache[s] for s in stems}
 
-    def _near_docs(self, operands: list, n: int, blocks: DataFrame) -> DataFrame:
-        """Docs matching FTS5 ``NEAR(p1 .. pk, n)``: one occurrence per
-        distinct operand phrase within a single field, max(start) -
-        min(end) <= n+1 over the chosen occurrence intervals (pinned by
-        randomized live-FTS5 differentials — see _near_match_factory).
-        Operands may be bare terms or token tuples (phrase operands).
-        Same plan shape as a phrase: the terms' PACKED blocks shuffle by
-        slice still compressed, one mapInPandas does the vectorized
-        window test."""
-        ops = [
-            ((op,),) if isinstance(op, str)
-            else tuple((sl,) if isinstance(sl, str) else tuple(sl) for sl in op)
-            for op in operands
-        ]
-        flat = sorted({t for op in ops for sl in op for t in sl})
-        nb = blocks.filter(F.col("term").isin(flat)).select(
-            "slice", "term", "fld", "doc_gaps", "tfs", "positions"
-        )
-        return nb.repartition("slice").mapInPandas(
-            _near_match_factory(ops, n), "doc_id long"
-        )
-
     def _coarse_intervals(self, rare: DataFrame, nbuck: int) -> DataFrame:
         """Coarsen a term's (min_doc, max_doc) block intervals to at most
         ``nbuck`` covering intervals, fully distributed: bucket by the
@@ -1345,7 +1178,7 @@ class SearchEngine:
         docs_filtered: DataFrame,
         has_doc_filters: bool,
         stats: dict[str, dict[int, dict]],
-        fused_probe=None,
+        probe: tuple,
     ):
         info = {"theta": 0.0, "range_pruned": False, "theta_pruned": False}
         # per-block score upper bound (safe under avgdl drift); avgdl is
@@ -1467,27 +1300,9 @@ class SearchEngine:
                 .filter(F.col("_rn") <= max(1, math.ceil(2 * k / self.block_size)))
                 .drop("_rn")
             )
-            if fused_probe is not None:
-                # one mapInArrow pass scores + qualifies + NOT-excludes
-                # the probe blocks (same machinery as the main fused
-                # candidate path — one exchange fewer than the staged
-                # unpack -> groupBy-fold -> anti-join probe, and the
-                # plan shape is shared with the main query). The
-                # candidate set is identical to the staged probe's, so
-                # theta is the same valid lower bound.
-                qual1 = fused_probe(top_blocks, not_blocks)
-            else:
-                phase1 = self.unpack(top_blocks)
-                scored1 = self._score(phase1, scaled_map)
-                # phrase alternatives dropped from OR groups:
-                # conservative subset -> theta stays a valid lower
-                # bound (see _qualify)
-                qual1 = self._qualify(
-                    scored1, pq.and_terms, [tg for tg, _ in pq.or_operands()]
-                )
-                if not_blocks is not None:
-                    nd = self.unpack(not_blocks).select("doc_id").distinct()
-                    qual1 = qual1.join(nd, "doc_id", "left_anti")
+            # the probe program runs through the same one-pass
+            # evaluator as the query; the NOT side is never pruned
+            qual1 = self._evaluate(top_blocks, not_blocks, probe, scaled_map)
             if has_doc_filters:
                 qual1 = qual1.join(docs_filtered.select("doc_id"), "doc_id", "left_semi")
             top = qual1.orderBy(F.col("score").desc()).limit(k).collect()
@@ -1513,187 +1328,126 @@ class SearchEngine:
                 info["theta_pruned"] = True
         return pos_blocks.drop("_ub"), not_blocks, info
 
-    # -- scoring + qualification ----------------------------------------
-    def _score(
-        self,
-        unpacked: DataFrame,
-        scaled_map: dict[tuple[str, int], float],
-        with_keys: bool = False,
-    ) -> DataFrame:
-        """Per-doc BM25 summed over (term, field) contributions; the
-        map value for (t, f) is field_weight_f * idf(t, f), so the total
-        is sum_f w_f * BM25_f — FTS5's multi-column bm25(fts, w1, w2).
+    # -- evaluation -------------------------------------------------------
+    def _flds(self, fs) -> tuple | None:
+        """A program leaf's field restriction: None = every field."""
+        if fs is None or set(fs) >= set(range(self.n_fields)):
+            return None
+        return tuple(sorted(fs))
 
-        Contributions are summed in CANONICAL (term, fld) ORDER
-        (array_sort before the fold), not with F.sum: float addition is
-        non-associative and a plain sum's order depends on partitioning,
-        which would make scores — and tie-breaks near the k-th rank —
-        run-dependent. This way scores are bit-identical across any
-        partitioning/cluster size (north_rule rank-identity)."""
-        scaled_expr = F.create_map(
-            *[
-                x
-                for (t, f), v in scaled_map.items()
-                for x in (F.lit(_tf_key(t, f)), F.lit(v))
-            ]
-        )
-        avgdl_expr = F.create_map(
-            *[
-                x
-                for f, a in self.avgdl_by_fld.items()
-                for x in (F.lit(f), F.lit(a))
-            ]
-        )
-        w = scaled_expr[_tf_key_col()] * bm25_weight_col(
-            F.col("tf"), F.col("dl"), avgdl_expr[F.col("fld")]
-        )
-        cols = [
-            "doc_id",
-            F.aggregate(
-                "_tw", F.lit(0.0), lambda acc, x: acc + x["_w"]
-            ).alias("score"),
-            F.transform("_tw", lambda x: x["term"]).alias("_terms"),
-        ]
-        if with_keys:
-            # per-(term, field) presence keys — the boolean-tree path
-            # qualifies column-restricted leaves against these (a bare
-            # term array cannot distinguish WHICH field matched)
-            cols.append(
-                F.transform(
-                    "_tw",
-                    lambda x: F.concat_ws(
-                        "\x00", x["term"], x["fld"].cast("string")
-                    ),
-                ).alias("_tkeys")
-            )
-        return (
-            unpacked.withColumn("_w", w)
-            .groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct("term", "fld", "_w"))).alias("_tw"))
-            .select(*cols)
-        )
+    def _scan(self, need: dict[str, frozenset]) -> DataFrame:
+        """Blocks of every term the program reads; a term needed only in
+        some fields drops its other-field blocks at the scan (fld rides
+        the block metadata, so this is a pushed filter)."""
+        cond = None
+        for t, fs in sorted(need.items()):
+            if self._flds(fs) is not None:
+                c = (F.col("term") == F.lit(t)) & ~F.col("fld").isin(sorted(fs))
+                cond = c if cond is None else (cond | c)
+        blocks = self.blocks(sorted(need))
+        return blocks if cond is None else blocks.filter(~cond)
 
-    def _qualify(
-        self,
-        scored: DataFrame,
-        and_terms: list[str],
-        or_term_groups: list[list[str]],
-    ) -> DataFrame:
-        """Term-level qualification: every AND term present, and at least
-        one alternative of each group in ``or_term_groups``. Groups with
-        phrase alternatives are applied by the caller (they need the
-        positional phrase-doc sets); passing only their term
-        alternatives here yields a conservative SUBSET — which is
-        exactly what the theta-probe phase needs for a safe bound."""
-        out = scored
-        need = sorted(set(and_terms))
-        if need:
-            cond = F.lit(True)
-            for t in need:
-                cond = cond & F.array_contains("_terms", t)
-            out = out.filter(cond)
-        for g in or_term_groups:
-            gcond = F.lit(False)
-            for t in sorted(set(g)):
-                gcond = gcond | F.array_contains("_terms", t)
-            out = out.filter(gcond)
-        return out
+    def _prefix_scaled(self, exp: dict[str, dict[str, dict[int, dict]]], weight) -> dict:
+        """Scoring entries ``(stem*, fld) -> weight(label, fld, df)`` of
+        the virtual prefix terms; ``exp`` maps each label to its
+        (field-restricted) expansion rows. The virtual df is the number
+        of distinct docs holding any expansion term in that field: free
+        from the dictionary when every stem expands to one term, else
+        ONE job over the expansions' postings."""
+        if all(len(m) == 1 for m in exp.values()):
+            dfs = {
+                (label, f): row["df"]
+                for label, m in exp.items()
+                for rows in m.values()
+                for f, row in rows.items()
+            }
+        else:
+            branch = None
+            for label, m in exp.items():
+                # each stem filters its own block scan (pushed, one row
+                # per block), never the unpacked postings
+                blocks = self.blocks(sorted(m))
+                flds = self._flds({f for rows in m.values() for f in rows})
+                if flds is not None:
+                    blocks = blocks.filter(F.col("fld").isin(list(flds)))
+                part = self.unpack(blocks).select(F.lit(label).alias("term"), "fld", "doc_id")
+                branch = part if branch is None else branch.unionByName(part)
+            dfs = {
+                (r["term"], int(r["fld"])): int(r["count"])
+                for r in branch.distinct().groupBy("term", "fld").count().collect()
+            }
+        return {(label, f): weight(label, f, df) for (label, f), df in dfs.items()}
 
-    def _probe_candidates(
+    def _evaluate(
         self,
-        top_blocks: DataFrame,
+        blocks: DataFrame,
         not_blocks: DataFrame | None,
-        scaled_map: dict,
-        and_terms: list[str],
-        or_term_groups: list[list[str]],
-        not_any_terms: list[str],
+        prog: tuple,
+        scaled: dict,
+        virtual: dict | None = None,
+        small: bool = False,
     ) -> DataFrame:
-        """Theta-probe candidates via the fused one-pass scorer:
-        positionless, term-level qualification only, NOT side excluded
-        on ANY match — exactly the staged probe's conservative
-        candidate set (phrase alternatives dropped from OR groups,
-        conjunctive NOT groups treated as any-match), so the k-th
-        score is the same valid theta lower bound."""
-        spec = {
-            "need_pos": False,
-            "scaled": dict(scaled_map),
-            "avgdl": dict(self.avgdl_by_fld),
-            "and_terms": sorted(set(and_terms)),
-            "or_term_groups": [sorted(set(g)) for g in or_term_groups],
-            "mixed": [],
-            "phrases": [],
-            "anchors": [],
-            "nears": [],
-            "not_terms": sorted(set(not_any_terms)),
-            "not_groups": [],
-            "not_phrases": [],
-        }
-        sel = ["slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"]
-        src = top_blocks.select(*sel).withColumn("_neg", F.lit(False))
-        if not_blocks is not None:
-            src = src.unionByName(
-                not_blocks.select(*sel).withColumn("_neg", F.lit(True))
+        """Run ``prog`` over the packed blocks in ONE mapInArrow pass
+        (:func:`_fused_score_factory`) -> ``(doc_id, score)``. Positive
+        and NOT-side blocks share the scan, tagged ``_neg``; positions
+        are read only when a window leaf exists. The blocks repartition
+        by slice into n_slices tasks — except when the program reads a
+        single (term, field): every doc then has one posting, so any
+        split is exact and the exchange is skipped. A ``small`` query
+        (dictionary-bounded) runs in at most 4 tasks either way: each
+        task is a Python worker round-trip, and near-empty tasks cost
+        more scheduling than the decode (a coalesced scan, or at most 4
+        hash partitions of the slices)."""
+        virtual = virtual or {}
+        need_pos = any(lf[0] != "has" for lf in _prog_leaves(prog))
+        if need_pos and not self.store_positions:
+            raise ValueError(
+                "phrase queries need positions, but this index was built "
+                "with store_positions=False"
             )
-        return src.repartition(max(1, self.n_slices), "slice").mapInArrow(
-            _fused_score_factory(spec), "doc_id long, score double"
-        )
-
-    def _fused_candidates(
-        self,
-        pq: ParsedQuery,
-        pos_blocks: DataFrame,
-        not_blocks: DataFrame | None,
-        scaled_map: dict,
-        or_ops: list,
-        live_groups: list,
-        live_nphrases: list,
-        not_single: list,
-    ) -> DataFrame:
-        """One-pass candidate evaluation over slice-complete partitions
-        of the packed blocks (see :func:`_fused_score_factory`). The
-        positive and NOT sides ride the same scan/shuffle, tagged with
-        a ``_neg`` flag; the positions column is read only when a
-        positional constraint exists. Partition count = n_slices (the
-        index's phrase-parallelism ceiling — scale-adaptive: slices
-        auto-size with corpus volume at build time)."""
-        mixed = [(sorted(set(tg)), pg) for tg, pg in or_ops if pg]
-        need_pos = bool(
-            pq.phrases or pq.anchors or pq.nears or live_nphrases or mixed
-        )
-
-        def _norm_near(op):
-            if isinstance(op, str):
-                return ((op,),)
-            return tuple((sl,) if isinstance(sl, str) else tuple(sl) for sl in op)
-
         spec = {
+            "prog": prog,
             "need_pos": need_pos,
-            "scaled": dict(scaled_map),
+            "scaled": dict(scaled),
             "avgdl": dict(self.avgdl_by_fld),
-            "and_terms": sorted(set(pq.and_terms)),
-            "or_term_groups": [sorted(set(tg)) for tg, pg in or_ops if not pg],
-            "mixed": mixed,
-            "phrases": [list(ph) for ph in pq.phrases],
-            "anchors": [list(ph) for ph in pq.anchors],
-            "nears": [
-                (list(dict.fromkeys(_norm_near(op) for op in tg)), int(nn) + 1)
-                for tg, nn in pq.nears
-            ],
-            "not_terms": list(not_single),
-            "not_groups": [sorted(set(g)) for g in live_groups],
-            "not_phrases": [list(ph) for ph in live_nphrases],
+            "virtual": virtual,
         }
         sel = ["slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
             ["positions"] if need_pos else []
         )
-        src = pos_blocks.select(*sel).withColumn("_neg", F.lit(False))
+        src = blocks.select(*sel).withColumn("_neg", F.lit(False))
         if not_blocks is not None:
-            src = src.unionByName(
-                not_blocks.select(*sel).withColumn("_neg", F.lit(True))
-            )
-        return src.repartition(max(1, self.n_slices), "slice").mapInArrow(
-            _fused_score_factory(spec), "doc_id long, score double"
+            src = src.unionByName(not_blocks.select(*sel).withColumn("_neg", F.lit(True)))
+        if not_blocks is None and not virtual and len(scaled) == 1:
+            if small:
+                src = src.coalesce(4)
+        else:
+            n = max(1, self.n_slices)
+            src = src.repartition(min(n, 4) if small else n, "slice")
+        return src.mapInArrow(_fused_score_factory(spec), "doc_id long, score double")
+
+    def _empty(self, pq: ParsedQuery, docs_f: DataFrame, key_meta: list, info: dict) -> SearchResult:
+        empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
+            "doc_id", *key_meta, "score"
         )
+        return SearchResult(empty, pq, {**info, "empty": True})
+
+    def _top_k(
+        self, pq, cand, total_df, docs_f, key_meta, order_cols, k, info
+    ) -> SearchResult:
+        """The index->row join (Q9) + top-k. When the dictionary says
+        the whole candidate side is small (total df across the query's
+        terms — known driver-side, no extra job), broadcast it so the
+        join probes the docs table instead of sort-merging it."""
+        if total_df <= self.broadcast_cand_max_postings:
+            cand = F.broadcast(cand)
+        out = (
+            cand.join(docs_f.select("doc_id", *key_meta), "doc_id")
+            .select("doc_id", *key_meta, "score")
+            .orderBy(*order_cols)
+            .limit(k)
+        )
+        return SearchResult(out, pq, info)
 
     # -- main entry -------------------------------------------------------
     def search(
@@ -1736,7 +1490,7 @@ class SearchEngine:
 
         if pq.tree is not None:
             # raw-FTS5 boolean structure the flat model can't express:
-            # generic expression-tree evaluation
+            # generic expression-tree compilation
             return self._search_tree(pq, k, docs_f, key_meta, order_cols, field_weights)
 
         if pq.is_empty():
@@ -1758,8 +1512,8 @@ class SearchEngine:
 
         pos_terms = pq.positive_terms
         # ONE dictionary lookup job for the whole query: positive terms
-        # + NOT-group/NOT-phrase terms together (both term_stats calls
-        # below hit the per-term cache)
+        # + NOT-side terms together (later term_stats calls hit the
+        # per-term cache)
         ng_all = (
             {t for g in pq.not_groups for t in g}
             | {t for ph in pq.not_phrases for t in ph}
@@ -1787,6 +1541,15 @@ class SearchEngine:
             | {t for lead, _s in pq.prefix_phrases for t in lead}
             | set(fld_of)
         )
+        # OR groups where no alternative exists -> unsatisfiable (a
+        # phrase alternative is live only if ALL its terms exist)
+        or_ops = [
+            (
+                [t for t in tg if t in stats],
+                [ph for ph in pg if all(t in stats for t in ph)],
+            )
+            for tg, pg in pq.or_operands()
+        ]
         if (
             any(t not in stats for t in required)
             or not (any(t in stats for t in pos_terms) or pos_stems)
@@ -1798,25 +1561,9 @@ class SearchEngine:
             or any(
                 not (set(stats.get(t, {})) & fs) for t, fs in fld_of.items()
             )
+            or any(not tg and not pg for tg, pg in or_ops)
         ):
-            empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
-                "doc_id", *key_meta, "score"
-            )
-            return SearchResult(empty, pq, {"empty": True})
-        # OR groups where no alternative exists -> unsatisfiable (a
-        # phrase alternative is live only if ALL its terms exist)
-        or_ops = [
-            (
-                [t for t in tg if t in stats],
-                [ph for ph in pg if all(t in stats for t in ph)],
-            )
-            for tg, pg in pq.or_operands()
-        ]
-        if any(not tg and not pg for tg, pg in or_ops):
-            empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
-                "doc_id", *key_meta, "score"
-            )
-            return SearchResult(empty, pq, {"empty": True})
+            return self._empty(pq, docs_f, key_meta, {})
 
         live_terms = [t for t in pos_terms if t in stats]
         fw = list(field_weights) if field_weights is not None else []
@@ -1831,74 +1578,28 @@ class SearchEngine:
             # (FTS5: col:t matches — and bm25 counts — those hits)
             if t not in fld_of or f in fld_of[t]
         }
-        pos_blocks = self.blocks(live_terms)
-        if fld_of:
-            # drop the restricted terms' other-field blocks at the scan
-            # (fld rides the block metadata, so this is a pushed filter,
-            # and the phrase/NEAR matchers downstream see only the
-            # restricted column's positions)
-            cond = None
-            for t, fs in fld_of.items():
-                c = (F.col("term") == F.lit(t)) & ~F.col("fld").isin(sorted(fs))
-                cond = c if cond is None else (cond | c)
-            pos_blocks = pos_blocks.filter(~cond)
-        # positive-prefix branch: each stem scores as ONE virtual term
-        # ("stem*" — NUL-free and star-free real terms can't collide).
-        # The expansion's packed blocks unpack positionless (same pushed
-        # In-filter scan as regular terms) and aggregate per (doc, fld):
-        # tf sums across matching tokens — one small extra shuffle,
-        # bounded by the expansion's postings. The virtual df (distinct
-        # matching docs per field, exact) needs one extra JOB over that
-        # branch — paid only when a stem expands to >=2 terms (a
-        # single-term stem's df is its dictionary df, free). In-field
-        # tf sums stay int32-safe: positions cap at 2^24 per field.
-        pfx_labels = [s + "*" for s in pos_stems]
-        pfx_branch = None
+        # each positive stem scores as ONE virtual term ("stem*" —
+        # NUL-free and star-free real terms can't collide) synthesized
+        # in the pass from its expansion's postings
         if pos_stems:
-            all_exp = sorted({t for s in pos_stems for t in pfx_exp[s]})
-            unp_pfx = self.unpack(self.blocks(all_exp))
-            parts = []
-            for s in pos_stems:
-                parts.append(
-                    unp_pfx.filter(F.col("term").isin(sorted(pfx_exp[s])))
-                    .groupBy("doc_id", "fld")
-                    .agg(
-                        F.sum("tf").cast("int").alias("tf"),
-                        F.max("dl").alias("dl"),
-                    )
-                    .select(
-                        F.lit(s + "*").alias("term"), "fld", "doc_id", "tf", "dl"
-                    )
+            scaled_map.update(
+                self._prefix_scaled(
+                    {s + "*": pfx_exp[s] for s in pos_stems},
+                    lambda _label, f, df: fw[f] * self.idf(df),
                 )
-            pfx_branch = parts[0]
-            for p in parts[1:]:
-                pfx_branch = pfx_branch.unionByName(p)
-            if any(len(pfx_exp[s]) > 1 for s in pos_stems):
-                # the virtual-df count job below and the main collect
-                # both consume this branch; a lazy localCheckpoint
-                # materializes it ONCE (at the count job) instead of
-                # re-running the expansion scan + aggregation in the
-                # main query — the branch is bounded by the (capped)
-                # expansion's postings, so holding it is safe
-                pfx_branch = pfx_branch.localCheckpoint(eager=False)
-                dfrows = pfx_branch.groupBy("term", "fld").count().collect()
-                for r in dfrows:
-                    scaled_map[(r["term"], int(r["fld"]))] = fw[
-                        int(r["fld"])
-                    ] * self.idf(int(r["count"]))
-            else:
-                for s in pos_stems:
-                    for m in pfx_exp[s].values():
-                        for f, row in m.items():
-                            scaled_map[(s + "*", f)] = fw[f] * self.idf(row["df"])
-        # NOT side: single terms exclude on any match; conjunctive NOT
-        # groups (sqlite `!"a b"` -> NOT (a AND b)) exclude only docs
-        # containing ALL group terms; negated phrases (websearch
-        # `-"a b"`) exclude on adjacent occurrence. Groups/phrases with
-        # a term absent from the corpus can never match — dropped.
+            )
+        virtual = {s + "*": (tuple(sorted(pfx_exp[s])), None) for s in pos_stems}
+        full = frozenset(range(self.n_fields))
+        need = {t: fld_of.get(t, full) for t in live_terms}
+        need.update({t: full for s in pos_stems for t in pfx_exp[s]})
+        pos_blocks = self._scan(need)
+
+        # NOT side: single terms and NOT prefixes exclude on any match;
+        # conjunctive NOT groups (sqlite `!"a b"` -> NOT (a AND b))
+        # exclude only docs containing ALL group terms; negated phrases
+        # (websearch `-"a b"`) exclude on adjacent occurrence. Anything
+        # with a term absent from the corpus can never match — dropped.
         ns_stats = self.term_stats(sorted(set(pq.not_terms)))
-        # a single NOT term absent from the corpus excludes nothing —
-        # dropping it here skips its whole anti-join stage
         not_single = sorted(t for t in set(pq.not_terms) if t in ns_stats)
         ng_terms = {t for g in pq.not_groups for t in g} | {
             t for ph in pq.not_phrases for t in ph
@@ -1906,19 +1607,55 @@ class SearchEngine:
         ng_stats = self.term_stats(sorted(ng_terms)) if ng_terms else {}
         live_groups = [g for g in pq.not_groups if all(t in ng_stats for t in g)]
         live_nphrases = [ph for ph in pq.not_phrases if all(t in ng_stats for t in ph)]
-        # NOT prefixes reduce exactly to single NOT terms: exclude on
-        # ANY expansion-term match (their dictionary rows came back
-        # with the expansion, so no extra stats job)
         npfx_terms = sorted(
             {t for s in pq.not_prefixes for t in pfx_exp.get(s, {})}
         )
+        not_any = sorted(set(not_single) | set(npfx_terms))
         not_all_terms = sorted(
-            set(not_single)
-            | set(npfx_terms)
+            set(not_any)
             | {t for g in live_groups for t in g}
             | {t for ph in live_nphrases for t in ph}
         )
         not_blocks = self.blocks(not_all_terms) if not_all_terms else None
+
+        # -- compile the flat query to a mask program ------------------
+        def has(label: str, neg: bool = False) -> tuple:
+            return ("has", label, None if neg else self._flds(fld_of.get(label)), neg)
+
+        def phrase(slots, flds=None, anchored=False, neg=False) -> tuple:
+            return ("phrase", tuple(slots), self._flds(flds), neg, anchored)
+
+        def words(ph) -> list:
+            return [(t,) for t in ph]
+
+        # col-restricted singles and standalone-prefix labels qualify as
+        # AND terms: their scoring rows are already field-restricted /
+        # exist iff some expansion term matched
+        terms_req = [has(t) for t in sorted(set(pq.and_terms) | set(col_single))]
+        terms_req += [has(s + "*") for s in pq.prefixes]
+        windows = [phrase(words(ph)) for ph in pq.phrases]
+        windows += [phrase(words(ph), anchored=True) for ph in pq.anchors]
+        windows += [
+            ("near", tuple(dict.fromkeys(((t,),) for t in tg)), None, False, int(nn) + 1)
+            for tg, nn in pq.nears
+        ]
+        windows += [phrase(words(ph), flds=fs) for ph, fs in col_phrases]
+        # FTS5 `"a b"*`: leading tokens adjacent, then ANY expansion term
+        windows += [
+            phrase(words(lead) + [tuple(sorted(pfx_exp[stem]))])
+            for lead, stem in pq.prefix_phrases
+        ]
+        groups = [
+            _or(*[has(t) for t in sorted(set(tg))], *[phrase(words(ph)) for ph in pg])
+            for tg, pg in or_ops
+        ]
+        not_side = [("unot", has(t, neg=True)) for t in not_any]
+        not_side += [
+            ("unot", _and(*[has(t, neg=True) for t in sorted(set(g))]))
+            for g in live_groups
+        ]
+        not_side += [("unot", phrase(words(ph), neg=True)) for ph in live_nphrases]
+        prog = _and(*terms_req, *groups, *windows, *not_side)
 
         info: dict = {}
         total_df = sum(s["df"] for t in live_terms for s in stats[t].values())
@@ -1937,9 +1674,7 @@ class SearchEngine:
             pq_pr = pq
             if pq.col_filters:
                 # the pruner sees col-restricted singles as AND terms
-                # (their scoring rows are already field-restricted, so
-                # term-level qualification is exact) and col phrases as
-                # phrases (adjacency -> theta must stay off)
+                # and col phrases as phrases (adjacency -> theta off)
                 from dataclasses import replace as _dc_replace
 
                 pq_pr = _dc_replace(
@@ -1947,294 +1682,27 @@ class SearchEngine:
                     and_terms=list(pq.and_terms) + sorted(col_single),
                     phrases=list(pq.phrases) + [ph for ph, _f in col_phrases],
                 )
-            fused_probe = None
-            if self._fused and not pos_stems and not pq.prefix_phrases and not pq.not_prefixes:
-                _pq_pr = pq_pr
-
-                def fused_probe(tb, nb):
-                    return self._probe_candidates(
-                        tb,
-                        nb,
-                        scaled_map,
-                        list(_pq_pr.and_terms),
-                        [tg for tg, _pg in _pq_pr.or_operands()],
-                        not_all_terms,
-                    )
-
+            # theta-probe program: positionless and conservative — term
+            # qualification only (phrase alternatives dropped from OR
+            # groups) and the NOT side excluded on ANY match — so its
+            # k-th score is a valid lower bound of the true k-th
+            probe = _and(
+                *terms_req,
+                *[_or(*[has(t) for t in sorted(set(tg))]) for tg, _pg in pq_pr.or_operands()],
+                *[("unot", has(t, neg=True)) for t in not_all_terms],
+            )
             pos_blocks, not_blocks, info = self._prune_blocks(
                 pos_blocks, not_blocks, pq_pr, scaled_map, k, docs_f,
-                has_doc_filters, stats, fused_probe=fused_probe,
+                has_doc_filters, stats, probe,
             )
 
-        mixed_groups = [(tg, pg) for tg, pg in or_ops if pg]
-        # positions are required only for phrase work that can actually
-        # run: LIVE alternatives/NOT-phrases (a dead phrase — one whose
-        # terms are absent from the corpus — never evaluates positions,
-        # so a positionless index answers the rest of the query fine)
-        if (
-            pq.phrases
-            or mixed_groups
-            or live_nphrases
-            or pq.nears
-            or pq.anchors
-            or col_phrases
-            or pq.prefix_phrases  # standalone prefixes never need positions
-        ) and not self.store_positions:
-            raise ValueError(
-                "phrase queries need positions, but this index was built "
-                "with store_positions=False"
-            )
-        # Scoring NEVER needs positions: unpack positionless (the varint
-        # positions payload — the largest column in the index — is
-        # column-pruned away at the parquet scan and never decoded).
-        # Positions are decoded separately below, only for blocks of
-        # terms that actually appear in a phrase.
-        single_path = (
-            len(scaled_map) == 1
-            and not pq.phrases
-            and not pq.nears
-            and not pq.anchors
-            and not col_phrases  # col-restricted SINGLES still qualify
-            and not pq.prefixes
-            and not pq.prefix_phrases
-            and not or_ops
-            and len(set(pq.and_terms)) <= 1
+        cand = self._evaluate(
+            pos_blocks, not_blocks, prog, scaled_map, virtual,
+            small=total_df <= self.broadcast_cand_max_postings,
         )
-        # A small single-term query coalesces the block scan to a few
-        # splits: each unpack task is a Python worker round-trip, and
-        # ~30 near-empty tasks cost more scheduling than the decode.
-        # Multi-term queries keep full scan parallelism — their _score
-        # groupBy wants parallel map-side partials (coalescing them
-        # measured ~0.2 s SLOWER at sf0.1) — and Zipf-head queries keep
-        # it for the decode itself.
-        fused_ok = (
-            self._fused
-            and not single_path
-            and not pos_stems
-            and not pq.prefix_phrases
-            and not pq.not_prefixes
-            and not pq.col_filters
-        )
-        if fused_ok:
-            # Fused slice-local path: unpack + canonical-order scoring +
-            # qualification + phrase/NEAR/anchor windows + NOT
-            # exclusions in ONE mapInArrow pass over slice-complete
-            # partitions of the packed blocks (_fused_score_factory —
-            # bit-identical to the staged plan by construction: slice =
-            # hash(doc_id) co-locates every term's postings for a doc,
-            # the invariant the phrase matcher always relied on). The
-            # staged plan below remains for prefix-expansion branches
-            # and column filters (which need cross-slice jobs or
-            # per-field scan restrictions) and for the single-term
-            # fast path.
-            cand = self._fused_candidates(
-                pq, pos_blocks, not_blocks, scaled_map, or_ops,
-                live_groups, live_nphrases, not_single,
-            )
-            not_blocks = None  # exclusions already applied in the pass
-        else:
-            unpack_src = pos_blocks
-            if single_path and total_df <= self.broadcast_cand_max_postings:
-                # A small single-term query coalesces the block scan to
-                # a few splits: each unpack task is a Python worker
-                # round-trip, and ~30 near-empty tasks cost more
-                # scheduling than the decode.
-                unpack_src = pos_blocks.coalesce(4)
-            unpacked = self.unpack(unpack_src)
-            if pfx_branch is not None:
-                # the virtual prefix rows score through the same fold as
-                # real (term, field) postings — their scaled_map entries
-                # were added above
-                unpacked = unpacked.unionByName(pfx_branch)
-            if single_path:
-                # single (term, field): each doc appears exactly once in the
-                # unpacked postings, so the groupBy-and-fold of _score is a
-                # pure pass-through — score directly, one less exchange.
-                # Bit-identical to the fold (0.0 + w == w in IEEE754) and
-                # qualification is trivially satisfied.
-                ((_t, f), v) = next(iter(scaled_map.items()))
-                cand = unpacked.select(
-                    "doc_id",
-                    (
-                        F.lit(v)
-                        * bm25_weight_col(
-                            F.col("tf"), F.col("dl"), self.avgdl_by_fld.get(f, 1.0)
-                        )
-                    ).alias("score"),
-                )
-            else:
-                scored = self._score(unpacked, scaled_map)
-                # pure-term OR groups qualify here; groups with live phrase
-                # alternatives need the positional phrase-doc sets below
-                cand = self._qualify(
-                    # col-restricted singles qualify as AND terms: their
-                    # scoring rows are already field-restricted, so term
-                    # presence here IS presence in the required column.
-                    # Standalone-prefix labels qualify exactly too: the
-                    # virtual row exists iff some expansion term matched
-                    # (prefix-PHRASE stems qualify via their adjacency
-                    # semi-join below instead)
-                    scored,
-                    list(pq.and_terms)
-                    + sorted(col_single)
-                    + [s + "*" for s in pq.prefixes],
-                    [tg for tg, pg in or_ops if not pg],
-                )
+        return self._top_k(pq, cand, total_df, docs_f, key_meta, order_cols, k, info)
 
-            for ph in pq.phrases:
-                # same estimation hole as the NOT side: the phrase-doc set
-                # comes out of mapInPandas, so broadcast it when the
-                # dictionary bounds it small (adjacent docs <= min term df)
-                phd = self._phrase_docs(ph, pos_blocks)
-                bound = min(
-                    sum(s["df"] for s in stats[t].values()) for t in set(ph)
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    phd = F.broadcast(phd)
-                cand = cand.join(phd, "doc_id", "left_semi")
-            for tg, nn in pq.nears:
-                # NEAR doc sets share the phrase path's estimation hole
-                # (mapInPandas output): broadcast under the dictionary
-                # bound (near docs <= min term df)
-                nd = self._near_docs(tg, nn, pos_blocks)
-                bound = min(sum(s["df"] for s in stats[t].values()) for t in set(tg))
-                if bound <= self.broadcast_cand_max_postings:
-                    nd = F.broadcast(nd)
-                cand = cand.join(nd, "doc_id", "left_semi")
-            for ph in pq.anchors:
-                # ^-anchored term/phrase: same bound, same semi-join shape
-                ad = self._anchor_docs(ph, pos_blocks)
-                bound = min(sum(s["df"] for s in stats[t].values()) for t in set(ph))
-                if bound <= self.broadcast_cand_max_postings:
-                    ad = F.broadcast(ad)
-                cand = cand.join(ad, "doc_id", "left_semi")
-            for ph, f in col_phrases:
-                # col-restricted phrase: pos_blocks already dropped these
-                # terms' other-field blocks, so the phrase matcher only
-                # sees — and can only match within — the required column
-                phd = self._phrase_docs(ph, pos_blocks)
-                bound = min(
-                    sum(s2["df"] for f2, s2 in stats[t].items() if f2 in f)
-                    for t in set(ph)
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    phd = F.broadcast(phd)
-                cand = cand.join(phd, "doc_id", "left_semi")
-            for lead, stem in pq.prefix_phrases:
-                # FTS5 `"a b"*`: leading tokens adjacent, then ANY stem
-                # expansion term — the matcher's last slot is the term SET.
-                # Fresh blocks (not pos_blocks): the expansion terms were
-                # never in the scoring scan, and a range-pruned lead block
-                # set would under-match
-                exp_terms = sorted(pfx_exp[stem])
-                ppd = self._phrase_docs(
-                    list(lead) + [exp_terms],
-                    self.blocks(sorted(set(lead) | set(exp_terms))),
-                )
-                bound = min(
-                    min(sum(s2["df"] for s2 in stats[t].values()) for t in set(lead)),
-                    sum(
-                        s2["df"]
-                        for m in pfx_exp[stem].values()
-                        for s2 in m.values()
-                    ),
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    ppd = F.broadcast(ppd)
-                cand = cand.join(ppd, "doc_id", "left_semi")
-            for tg, pg in mixed_groups:
-                # satisfied by any term alternative OR any adjacent phrase
-                # alternative (websearch `"a b" OR c` keeps adjacency)
-                tcond = F.lit(False)
-                for t in sorted(set(tg)):
-                    tcond = tcond | F.array_contains("_terms", t)
-                phd = self._phrase_docs(pg[0], pos_blocks)
-                for ph in pg[1:]:
-                    phd = phd.unionByName(self._phrase_docs(ph, pos_blocks))
-                phd = phd.distinct().withColumn("_pm", F.lit(1))
-                cand = (
-                    cand.join(phd, "doc_id", "left")
-                    .filter(tcond | F.col("_pm").isNotNull())
-                    .drop("_pm")
-                )
-            cand = cand.drop("_terms")
-
-        if not_blocks is not None:
-            unp_not = self.unpack(not_blocks)
-
-            # the dictionary bounds each excluded-doc set driver-side
-            # (sum of per-field df for single terms; min df over a
-            # conjunctive group/phrase — docs holding ALL terms can't
-            # outnumber the rarest). Small NOT sides broadcast into the
-            # anti-join (BroadcastHashJoin LeftAnti): the candidate side
-            # is never shuffled just to subtract a handful of doc_ids.
-            # mapInPandas output defeats size ESTIMATION, so without the
-            # hint these anti-joins sort-merge.
-            def _bcast_if_small(nd, df_bound: int):
-                return (
-                    F.broadcast(nd)
-                    if df_bound <= self.broadcast_cand_max_postings
-                    else nd
-                )
-
-            def _total_df(t, st):
-                return sum(s["df"] for s in st.get(t, {}).values())
-
-            if not_single or npfx_terms:
-                nsingle = sorted(set(not_single) | set(npfx_terms))
-                nd = unp_not.filter(F.col("term").isin(nsingle)).select("doc_id")
-                # NOT-prefix bound from the expansion rows (a term in
-                # two stems counts twice — safe overestimate)
-                bound = sum(_total_df(t, ns_stats) for t in not_single) + sum(
-                    s2["df"]
-                    for s in pq.not_prefixes
-                    for m in pfx_exp.get(s, {}).values()
-                    for s2 in m.values()
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    # no distinct: a broadcast hash anti-join is a set
-                    # probe, duplicate build keys are harmless — the
-                    # distinct's full shuffle is pure overhead here
-                    nd = F.broadcast(nd)
-                else:
-                    # shuffle path: distinct's map-side partial agg
-                    # shrinks the exchange (df docs -> unique docs)
-                    nd = nd.distinct()
-                cand = cand.join(nd, "doc_id", "left_anti")
-            for g in live_groups:
-                gset = sorted(set(g))
-                gd = (
-                    unp_not.filter(F.col("term").isin(gset))
-                    .groupBy("doc_id")
-                    .agg(F.countDistinct("term").alias("_n"))
-                    .filter(F.col("_n") == len(gset))
-                    .select("doc_id")
-                )
-                bound = min(_total_df(t, ng_stats) for t in gset)
-                cand = cand.join(_bcast_if_small(gd, bound), "doc_id", "left_anti")
-            for ph in live_nphrases:
-                phd = self._phrase_docs(ph, not_blocks)
-                bound = min(_total_df(t, ng_stats) for t in set(ph))
-                cand = cand.join(_bcast_if_small(phd, bound), "doc_id", "left_anti")
-
-        # the index->row join (Q9): when the dictionary says the whole
-        # candidate side is small (total df across the query's terms —
-        # known driver-side, no extra job), broadcast it so the join
-        # probes the docs table instead of sort-merging it. Zipf-head
-        # queries exceed the bound and keep the shuffle join (AQE picks
-        # the strategy from runtime sizes there).
-        cand_out = cand
-        if total_df <= self.broadcast_cand_max_postings:
-            cand_out = F.broadcast(cand)
-        out = (
-            cand_out.join(docs_f.select("doc_id", *key_meta), "doc_id")
-            .select("doc_id", *key_meta, "score")
-            .orderBy(*order_cols)
-            .limit(k)
-        )
-        return SearchResult(out, pq, info)
-
-    # -- generic boolean-tree evaluation (raw-FTS5 surface) --------------
+    # -- generic boolean-tree compilation (raw-FTS5 surface) -------------
     def _search_tree(
         self,
         pq: ParsedQuery,
@@ -2247,36 +1715,30 @@ class SearchEngine:
         """Evaluate a raw-FTS5 boolean expression tree that the flat
         ParsedQuery model can't express (``a OR (b NOT c)``,
         ``NEAR(a b) OR c``, ``text:(x OR y)``, ``col:NEAR(...)``,
-        ``col:a*``, ...).
+        ``col:a*``, ...): the annotated, simplified tree compiles to the
+        same mask program the flat path runs.
 
-        Plan shape: ONE positionless unpack over every leaf term's
-        blocks (whatever its polarity — a doc can satisfy the tree
+        Every leaf reads the positive side (a doc can satisfy the tree
         through negations, so the candidate universe is docs holding
         ANY leaf term; docs holding none evaluate like the empty
-        document, which was proven non-matching below), the same
-        canonical-order score fold as the flat path (non-scoring
-        leaves — NOT right operands and hybrid ``!`` — carry weight
-        0.0: they flag presence without perturbing the sum, and
-        x + 0.0 == x in IEEE754 so scores stay bit-identical to the
-        flat plan on flat-equivalent trees), one flag column per
-        DISTINCT positional leaf (phrase/NEAR/anchor/prefix-phrase
-        doc sets LEFT-joined, broadcast under the dictionary bound),
-        and the tree compiled to a single Catalyst boolean over the
-        ``_terms`` array + flags. Block-max pruning stays off: theta
-        is unsound under OR/NOT structure and these queries are the
-        rare tail — the exhaustive plan is the correct default.
+        document, which was proven non-matching below). Non-scoring
+        leaves — NOT right operands and hybrid ``!`` — carry weight 0.0:
+        they flag presence without perturbing the sum (x + 0.0 == x in
+        IEEE754, so scores stay bit-identical to the flat plan on
+        flat-equivalent trees). Block-max pruning stays off: theta is
+        unsound under OR/NOT structure and these queries are the rare
+        tail — the exhaustive plan is the correct default.
 
         Column filters are PER-LEAF (FTS5 treats ``text:a OR
-        subject:a`` as two independent phrases of the same term):
-        an annotate pass resolves each leaf's colspec chain to a field
-        set carried on the leaf, the block scan reads the UNION of a
-        term's allowed fields (pushed filter), qualification tests
-        per-(term, field) presence keys (``_tkeys``), and each
-        positional matcher sees only its own leaf's fields. One
-        documented scoring deviation: a term restricted differently in
-        two scoring leaves scores each (term, field) contribution
-        ONCE (FTS5's bm25 would count a field hit once per covering
-        phrase); match sets are exact either way (differentials)."""
+        subject:a`` as two independent phrases of the same term): an
+        annotate pass resolves each leaf's colspec chain to a field set
+        carried on the leaf, the scan reads the UNION of a term's
+        allowed fields (pushed filter), and each leaf — presence or
+        window — reads only its own fields. One documented scoring
+        deviation: a term restricted differently in two scoring leaves
+        scores each (term, field) contribution ONCE (FTS5's bm25 would
+        count a field hit once per covering phrase); match sets are
+        exact either way (differentials)."""
         full = frozenset(range(self.n_fields))
         col_map = {c.lower(): i for i, c in enumerate(self.text_cols)}
 
@@ -2350,10 +1812,7 @@ class SearchEngine:
         tree = _tree_simplify(tree, dead_leaf)
         info: dict = {"tree": True}
         if tree.kind == "false":
-            empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
-                "doc_id", *key_meta, "score"
-            )
-            return SearchResult(empty, pq, {**info, "empty": True})
+            return self._empty(pq, docs_f, key_meta, info)
         if _tree_matches_empty_doc(tree):
             raise ValueError(
                 "query is satisfied by documents containing none of its "
@@ -2361,56 +1820,36 @@ class SearchEngine:
                 "index (FTS5 refuses `NOT a` the same way)"
             )
 
-        # SURVIVING leaves only: the scan reads the UNION of each
-        # term's allowed fields across its live leaves; scoring fields
-        # are the union over live SCORING leaves (a folded-away scoring
-        # leaf must not grant weight to a term that only survives
-        # NOT-side — the flat path's NOT terms never score either).
-        # Positional flags key on (shape, field set): the same phrase
-        # under two different column filters is two distinct FTS5
-        # phrases with two distinct doc sets.
+        # SURVIVING leaves only: the scan reads the UNION of each term's
+        # allowed fields across its live leaves; scoring fields are the
+        # union over live SCORING leaves (a folded-away scoring leaf
+        # must not grant weight to a term that only survives NOT-side —
+        # the flat path's NOT terms never score either)
         leaves: list = []
         _tree_walk_leaves(tree, (), True, leaves)
-        used_terms: set[str] = set()
-        used_stems: set[str] = set()
         scan_fld: dict[str, set] = {}
         score_fld: dict[str, set] = {}
         scan_stem: dict[str, set] = {}
         score_stem: dict[str, set] = {}
-        pos_leaves: dict[tuple, Node] = {}
         for leaf, _specs, sc in leaves:
-            key = _tree_positional_key(leaf)
-            if key is not None:
-                pos_leaves.setdefault(key + (leaf.spec,), leaf)
             fs = set(leaf.spec)
             for t in _leaf_terms(leaf):
-                used_terms.add(t)
                 scan_fld.setdefault(t, set()).update(fs)
                 if sc:
                     score_fld.setdefault(t, set()).update(fs)
             for st in _leaf_stems(leaf):
-                used_stems.add(st)
                 scan_stem.setdefault(st, set()).update(fs)
                 if sc:
                     score_stem.setdefault(st, set()).update(fs)
 
-        if pos_leaves and not self.store_positions:
-            raise ValueError(
-                "phrase queries need positions, but this index was built "
-                "with store_positions=False"
-            )
-
-        live_terms = sorted(
-            t for t in used_terms if live_flds(t, scan_fld[t])
-        )
-        live_stems = sorted(
-            s for s in used_stems if stem_live(s, scan_stem[s])
-        )
+        live_terms = sorted(t for t in scan_fld if live_flds(t, scan_fld[t]))
+        stem_exp = {
+            s: m for s in sorted(scan_stem) if (m := stem_live(s, scan_stem[s]))
+        }
         fw = list(field_weights) if field_weights is not None else []
         fw += [1.0] * (self.n_fields - len(fw))
-        # weight 0.0 for (term, field) pairs scanned only for NOT-side
-        # presence: the fold keeps them out of the sum but their keys
-        # still land in _tkeys for qualification
+        # weight 0.0 for (term, field) pairs read only for NOT-side
+        # presence: the fold keeps them out of the sum
         scaled_map = {
             (t, f): (
                 fw[f] * self.idf(stats[t][f]["df"])
@@ -2420,215 +1859,62 @@ class SearchEngine:
             for t in live_terms
             for f in sorted(live_flds(t, scan_fld[t]))
         }
-
-        pos_blocks = self.blocks(live_terms)
-        restricted = {
-            t: fs for t in live_terms if (fs := scan_fld[t]) != full
+        if stem_exp:
+            scaled_map.update(
+                self._prefix_scaled(
+                    {s + "*": m for s, m in stem_exp.items()},
+                    lambda label, f, df: (
+                        fw[f] * self.idf(df)
+                        if f in score_stem.get(label[:-1], ())
+                        else 0.0
+                    ),
+                )
+            )
+        virtual = {
+            s + "*": (tuple(sorted(m)), self._flds(scan_stem[s]))
+            for s, m in stem_exp.items()
         }
-        if restricted:
-            # drop fields no leaf allows at the scan (fld rides the
-            # block metadata — a pushed filter); per-LEAF narrowing
-            # happens again at each positional matcher's source
-            cond = None
-            for t, fs in restricted.items():
-                c = (F.col("term") == F.lit(t)) & ~F.col("fld").isin(sorted(fs))
-                cond = c if cond is None else (cond | c)
-            pos_blocks = pos_blocks.filter(~cond)
+        need = {t: frozenset(scan_fld[t]) for t in live_terms}
+        for s, m in stem_exp.items():
+            for t in m:
+                need[t] = need.get(t, frozenset()) | frozenset(scan_stem[s])
 
-        unpacked = self.unpack(pos_blocks)
-
-        # virtual prefix branch, exactly the flat path's: per stem one
-        # "stem*" row per (doc, fld) with tf summed over the expansion
-        def _stem_df_total(s: str, fs) -> int:
-            return sum(
-                r["df"]
-                for m in stem_live(s, fs).values()
-                for r in m.values()
+        def slots(toks, fs) -> tuple:
+            """Marker slots become their stem's (leaf-field-restricted)
+            expansion."""
+            return tuple(
+                (sl,) if isinstance(sl, str) else tuple(sorted(stem_live(sl[1], fs)))
+                for sl in toks
             )
 
-        if live_stems:
-            all_exp = sorted(
-                {t for s in live_stems for t in stem_live(s, scan_stem[s])}
-            )
-            exp_blocks = self.blocks(all_exp)
-            parts = []
-            for s in live_stems:
-                src = exp_blocks.filter(
-                    F.col("term").isin(sorted(stem_live(s, scan_stem[s])))
-                )
-                if scan_stem[s] != full:
-                    src = src.filter(F.col("fld").isin(sorted(scan_stem[s])))
-                parts.append(
-                    self.unpack(src)
-                    .groupBy("doc_id", "fld")
-                    .agg(
-                        F.sum("tf").cast("int").alias("tf"),
-                        F.max("dl").alias("dl"),
-                    )
-                    .select(
-                        F.lit(s + "*").alias("term"), "fld", "doc_id", "tf", "dl"
-                    )
-                )
-            branch = parts[0]
-            for p in parts[1:]:
-                branch = branch.unionByName(p)
+        def compile_node(node: Node) -> tuple:
+            kind = node.kind
+            if kind in _BOOL_KINDS or kind in ("true", "false"):
+                return (kind, *(compile_node(c) for c in node.kids))
+            fs = set(node.spec)
+            flds = self._flds(fs)
+            if kind == "prefix":
+                return ("has", node.stem + "*", flds, False)
+            if kind == "near":
+                ops = tuple(dict.fromkeys(slots(op, fs) for op in node.toks))
+                return ("near", ops, flds, False, int(node.n) + 1)
+            if kind == "prefix_phrase":
+                pp = slots(node.toks, fs) + (tuple(sorted(stem_live(node.stem, fs))),)
+                return ("phrase", pp, flds, False, False)
+            if kind == "anchor" or (kind == "phrase" and len(node.toks) > 1):
+                return ("phrase", slots(node.toks, fs), flds, False, kind == "anchor")
+            # term or single-token phrase (adjacency is vacuous)
+            return ("has", node.toks[0], flds, False)
 
-            def _stem_w(s: str, f: int, df: int) -> float:
-                return (
-                    fw[f] * self.idf(df)
-                    if f in score_stem.get(s, ())
-                    else 0.0
-                )
-
-            # virtual per-field df: exact (one job) when any stem has a
-            # multi-term expansion, free from the dictionary otherwise
-            if any(
-                len(stem_live(s, scan_stem[s])) > 1 for s in live_stems
-            ):
-                for r in branch.groupBy("term", "fld").count().collect():
-                    scaled_map[(r["term"], int(r["fld"]))] = _stem_w(
-                        r["term"][:-1], int(r["fld"]), int(r["count"])
-                    )
-            else:
-                for s in live_stems:
-                    for m in stem_live(s, scan_stem[s]).values():
-                        for f, row in m.items():
-                            scaled_map[(s + "*", f)] = _stem_w(s, f, row["df"])
-            unpacked = unpacked.unionByName(branch)
-
-        cand = self._score(unpacked, scaled_map, with_keys=True)
-
-        # one flag column per distinct positional (leaf, field set) —
-        # LEFT join: the tree may OR or negate it, so a semi/anti join
-        # would be wrong
-        flag_col: dict[tuple, str] = {}
         total_df = sum(
             s["df"] for t in live_terms for f, s in stats[t].items()
             if f in scan_fld[t]
-        ) + sum(_stem_df_total(s, scan_stem[s]) for s in live_stems)
-
-        def _term_df(t: str) -> int:
-            # scan-union df: an upper bound of any leaf-restricted set
-            return sum(
-                s["df"] for f, s in stats[t].items() if f in scan_fld[t]
-            )
-
-        def _leaf_block_src(leaf: Node) -> DataFrame:
-            """Narrow the block source to THIS leaf's fields.
-            pos_blocks covers each term's scan-union fields; a leaf
-            restricted below that union (or carrying prefix stems,
-            whose expansions are never in the scoring scan) gets its
-            own pushed-filter source."""
-            fs = set(leaf.spec)
-            stems = set(_leaf_stems(leaf))
-            plain = set(_leaf_terms(leaf))
-            if not stems:
-                if fs == full:
-                    return pos_blocks
-                return pos_blocks.filter(
-                    ~F.col("term").isin(sorted(plain))
-                    | F.col("fld").isin(sorted(fs))
-                )
-            exp = {t for st in stems for t in stem_live(st, fs)}
-            src = self.blocks(sorted(plain | exp))
-            if fs != full:
-                src = src.filter(F.col("fld").isin(sorted(fs)))
-            return src
-
-        def _expand_slots(slots, fs) -> list:
-            """Marker slots become their stem's (leaf-field-restricted)
-            expansion — the positional matchers' list slots."""
-            return [
-                sl if isinstance(sl, str) else sorted(stem_live(sl[1], fs))
-                for sl in slots
-            ]
-
-        def _leaf_bound(leaf: Node) -> int:
-            vals = [_term_df(t) for t in set(_leaf_terms(leaf))]
-            vals += [
-                _stem_df_total(st, set(leaf.spec))
-                for st in set(_leaf_stems(leaf))
-            ]
-            return min(vals)
-
-        for i, key in enumerate(sorted(pos_leaves, key=repr)):
-            leaf = pos_leaves[key]
-            fs = set(leaf.spec)
-            name = f"_pf{i}"
-            flag_col[key] = name
-            src = _leaf_block_src(leaf)
-            bound = _leaf_bound(leaf)
-            if leaf.kind == "near":
-                ops = [_expand_slots(op, fs) for op in leaf.toks]
-                fdf = self._near_docs(ops, leaf.n, src)
-            elif leaf.kind == "anchor":
-                fdf = self._anchor_docs(_expand_slots(leaf.toks, fs), src)
-            elif leaf.kind == "prefix_phrase":
-                fdf = self._phrase_docs(
-                    list(leaf.toks) + [sorted(stem_live(leaf.stem, fs))], src
-                )
-            else:  # multi-token phrase (slots may carry prefix markers)
-                fdf = self._phrase_docs(_expand_slots(leaf.toks, fs), src)
-            fdf = fdf.withColumn(name, F.lit(True))
-            if bound <= self.broadcast_cand_max_postings:
-                fdf = F.broadcast(fdf)
-            cand = cand.join(fdf, "doc_id", "left")
-
-        def _presence(label: str, fields) -> object:
-            """Presence of ``label`` in any of ``fields`` — an OR over
-            the per-(term, field) keys the fold emitted."""
-            cond = F.lit(False)
-            for f in sorted(fields):
-                cond = cond | F.array_contains("_tkeys", _tf_key(label, f))
-            return cond
-
-        def compile_node(node: Node):
-            k2 = node.kind
-            if k2 in ("and", "or"):
-                cols = [compile_node(c) for c in node.kids]
-                out = cols[0]
-                for c in cols[1:]:
-                    out = (out & c) if k2 == "and" else (out | c)
-                return out
-            if k2 == "not":
-                return compile_node(node.kids[0]) & ~compile_node(node.kids[1])
-            if k2 == "unot":
-                return ~compile_node(node.kids[0])
-            if k2 == "true":
-                return F.lit(True)
-            if k2 == "false":
-                return F.lit(False)
-            key = _tree_positional_key(node)
-            if key is not None:
-                return F.coalesce(
-                    F.col(flag_col[key + (node.spec,)]), F.lit(False)
-                )
-            fs = set(node.spec)
-            if k2 == "prefix":
-                fields = {
-                    f for m in stem_live(node.stem, fs).values() for f in m
-                }
-                return _presence(node.stem + "*", fields)
-            # term or single-token phrase (adjacency is vacuous)
-            return _presence(node.toks[0], live_flds(node.toks[0], fs))
-
-        cand = cand.filter(compile_node(tree)).drop(
-            "_terms", "_tkeys", *flag_col.values()
+        ) + sum(r["df"] for m in stem_exp.values() for rows in m.values() for r in rows.values())
+        cand = self._evaluate(
+            self._scan(need), None, compile_node(tree), scaled_map, virtual,
+            small=total_df <= self.broadcast_cand_max_postings,
         )
-
-        cand_out = (
-            F.broadcast(cand)
-            if total_df <= self.broadcast_cand_max_postings
-            else cand
-        )
-        out = (
-            cand_out.join(docs_f.select("doc_id", *key_meta), "doc_id")
-            .select("doc_id", *key_meta, "score")
-            .orderBy(*order_cols)
-            .limit(k)
-        )
-        return SearchResult(out, pq, info)
-
+        return self._top_k(pq, cand, total_df, docs_f, key_meta, order_cols, k, info)
 
     def attach_text(self, result: DataFrame, source: DataFrame) -> DataFrame:
         """Q9/Q13 analog: join scored keys back to the row store for full

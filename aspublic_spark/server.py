@@ -33,6 +33,7 @@ Endpoints (all JSON):
 from __future__ import annotations
 
 import json
+import math
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -220,7 +221,12 @@ class QueryServer:
         websearch = one("websearch", "0").lower() in ("1", "true", "yes")
         fts5 = one("fts5", "0").lower() in ("1", "true", "yes")
         fw = one("field_weights")
-        fw = [float(x) for x in fw.split(",")] if fw else None
+        try:
+            fw = [float(x) for x in fw.split(",")] if fw else None
+            if fw is not None and not all(map(math.isfinite, fw)):
+                raise ValueError
+        except ValueError:
+            return 400, {"error": "field_weights must be finite numbers"}
         try:
             conv_prefix = validate_conv_prefix(one("conv_prefix"))
             after = parse_ts_param(one("after"))

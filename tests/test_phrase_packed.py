@@ -1,7 +1,8 @@
 """Differential test for the packed phrase matcher.
 
-The vectorized decode in engine._phrase_match_factory (record split via
-tfs, grouped cumsum, int64 key packing, np.intersect1d chain) is checked
+The vectorized decode and phrase window of engine._fused_score_factory
+(record split via tfs, grouped cumsum, int64 key packing,
+np.intersect1d chain in _phrase_set_from_cat) is checked
 against a brute-force Python reference over randomized corpora: build a
 real index, run phrase queries through SearchEngine, and compare with
 naive token-window scanning of the source text.

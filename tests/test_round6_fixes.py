@@ -9,12 +9,15 @@ they rely on:
    decodes to exactly a per-document pure-Python reference.
 2. ``encode_grouped_records_offsets`` (the shared-buffer positions
    encoder) slices exactly like the per-group ``bytes`` encoder.
-3. The fused slice-local candidate path returns results bit-identical
-   to the staged plan (scores compared exactly, not approximately) for
-   every flat query family it covers, on an index with heavy-hitter
-   salting and NOT/phrase/NEAR/anchor/OR shapes.
+3. The one slice-local evaluator answers the flat query families
+   (AND, NOT, NOT group, phrase, OR with a phrase alternative, doc
+   filter, recency order) exactly like a naive pandas BM25 oracle on an
+   index with heavy-hitter salting, and forced pruning returns exactly
+   the exhaustive result. NEAR and anchors are pinned by the live-FTS5
+   differentials (test_near.py, test_fts5_tree.py).
 """
 
+import math
 import os
 import shutil
 
@@ -22,10 +25,11 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from aspublic_spark.functions.tokenizer import tokenize
 from aspublic_spark.index import codec
 from aspublic_spark.index.build import IndexBuilder, _tokenize_partials_arrow_factory
 from aspublic_spark.query.engine import SearchEngine
-from aspublic_spark.query.parser import parse_fts5, parse_websearch
+from aspublic_spark.query.parser import parse_websearch
 from aspublic_spark.tables import synth_transcripts
 
 
@@ -110,19 +114,65 @@ def test_grouped_records_offsets_match_bytes_encoder():
     assert via_offsets == codec.encode_grouped_records(vals, lens)
 
 
-FUSED_QUERIES = [
-    ("query spark", {}),
-    ("query spark !shuffle", {}),
-    ('"the the"', {}),
-    ('table !"data query"', {}),
-    ("dup OR vector", {"parser": parse_websearch}),
-    ('"data query" OR zebra', {"parser": parse_websearch}),
-    ("NEAR(data query, 3)", {"parser": parse_fts5}),
-    ("^the", {"parser": parse_fts5}),
-    ("query spark", {"role": "assistant"}),
-    ("data example !query", {"order": "recency"}),
-    ("query !query", {}),
+K1, B = 1.2, 0.75
+
+
+def _adjacent(toks, ph) -> bool:
+    n = len(ph)
+    return any(toks[i : i + n] == ph for i in range(len(toks) - n + 1))
+
+
+# (query, search kwargs, scoring terms, match predicate over (tokens, row))
+ORACLE_QUERIES = [
+    ("query spark", {}, ["query", "spark"],
+     lambda ts, r: {"query", "spark"} <= set(ts)),
+    ("query spark !shuffle", {}, ["query", "spark"],
+     lambda ts, r: {"query", "spark"} <= set(ts) and "shuffle" not in ts),
+    ('"the the"', {}, ["the"], lambda ts, r: _adjacent(ts, ["the", "the"])),
+    # sqlite semantics: !"a b" excludes docs holding BOTH terms
+    ('table !"data query"', {}, ["table"],
+     lambda ts, r: "table" in ts and not {"data", "query"} <= set(ts)),
+    ("dup OR vector", {"parser": parse_websearch}, ["dup", "vector"],
+     lambda ts, r: "dup" in ts or "vector" in ts),
+    ('"data query" OR zebra', {"parser": parse_websearch},
+     ["data", "query", "zebra"],
+     lambda ts, r: "zebra" in ts or _adjacent(ts, ["data", "query"])),
+    ("query spark", {"role": "assistant"}, ["query", "spark"],
+     lambda ts, r: {"query", "spark"} <= set(ts) and r["role"] == "assistant"),
+    ("data example !query", {"order": "recency"}, ["data", "example"],
+     lambda ts, r: {"data", "example"} <= set(ts) and "query" not in ts),
+    ("query !query", {}, ["query"], lambda ts, r: False),
 ]
+
+
+def _bm25_oracle(pdf, scoring, match, k, order="bm25"):
+    """Naive BM25 (k1=1.2, b=0.75, idf=ln((N-df+.5)/(df+.5)+1)) over
+    the source rows: [(conv_id, turn_idx, score)] in the engine's order
+    (score or ts desc, then key asc)."""
+    toks_all = [tokenize(t) for t in pdf["text"]]
+    n = len(toks_all)
+    avgdl = sum(map(len, toks_all)) / n
+    dfreq = {t: sum(t in ts for ts in toks_all) for t in scoring}
+    out = []
+    for (_, row), toks in zip(pdf.iterrows(), toks_all):
+        if not match(toks, row):
+            continue
+        score = 0.0
+        for t in scoring:
+            tf = toks.count(t)
+            if tf:
+                idf = math.log((n - dfreq[t] + 0.5) / (dfreq[t] + 0.5) + 1)
+                score += idf * tf * (K1 + 1) / (tf + K1 * (1 - B + B * len(toks) / avgdl))
+        first = -score if order == "bm25" else -row["ts"].value
+        out.append((first, row["conv_id"], row["turn_idx"], score))
+    out.sort(key=lambda x: x[:3])
+    return [(c, t, s) for _f, c, t, s in out[:k]]
+
+
+def _assert_matches_oracle(rows, want):
+    assert [(r["conv_id"], r["turn_idx"]) for r in rows] == [(c, t) for c, t, _ in want]
+    for r, (_c, _t, s) in zip(rows, want):
+        assert abs(r["score"] - s) < 1e-9, (r, s)
 
 
 @pytest.fixture(scope="module")
@@ -135,17 +185,22 @@ def fused_idx(spark, workdir):
     return idx
 
 
-def test_fused_path_bit_identical_to_staged(spark, fused_idx):
+@pytest.fixture(scope="module")
+def fused_corpus(spark):
+    return synth_transcripts(spark, 4000, seed=42).toPandas()
+
+
+def test_flat_query_families_match_pandas_oracle(spark, fused_idx, fused_corpus):
     eng = SearchEngine(spark, fused_idx)
     nonzero = 0
-    for q, kw in FUSED_QUERIES:
-        eng._fused = True
-        a = eng.search(q, k=100, **kw).df.collect()
-        eng._fused = False
-        b = eng.search(q, k=100, **kw).df.collect()
-        assert a == b, q  # Row equality includes exact score bits
-        nonzero += bool(a)
-    assert nonzero >= 8  # the comparisons are non-vacuous
+    for q, kw, scoring, match in ORACLE_QUERIES:
+        rows = eng.search(q, k=100, **kw).df.collect()
+        want = _bm25_oracle(
+            fused_corpus, scoring, match, 100, kw.get("order", "bm25")
+        )
+        _assert_matches_oracle(rows, want)
+        nonzero += bool(rows)
+    assert nonzero >= 7  # the comparisons are non-vacuous
 
 
 def test_partial_block_build_matches_python_reference(spark, workdir):
@@ -217,15 +272,21 @@ def test_partial_block_build_matches_python_reference(spark, workdir):
         )
 
 
-def test_fused_path_bit_identical_under_forced_pruning(spark, fused_idx):
+def test_forced_pruning_matches_exhaustive_and_oracle(spark, fused_idx, fused_corpus):
     eng = SearchEngine(spark, fused_idx, prune_min_postings=0)
-    for q in ["query spark", "query spark !shuffle", "the and"]:
-        eng._fused = True
-        a = eng.search(q, k=100).df.collect()
-        eng._fused = False
-        b = eng.search(q, k=100).df.collect()
-        assert a == b, q
-        assert a
+    for q, terms, match in [
+        ("query spark", ["query", "spark"],
+         lambda ts, r: {"query", "spark"} <= set(ts)),
+        ("query spark !shuffle", ["query", "spark"],
+         lambda ts, r: {"query", "spark"} <= set(ts) and "shuffle" not in ts),
+        ("the and", ["the", "and"], lambda ts, r: {"the", "and"} <= set(ts)),
+    ]:
+        res = eng.search(q, k=100)
+        assert "theta" in res.pruning, q  # the pruner ran
+        pruned = res.df.collect()
+        assert pruned == eng.search(q, k=100, block_max=False).df.collect(), q
+        _assert_matches_oracle(pruned, _bm25_oracle(fused_corpus, terms, match, 100))
+        assert pruned
 
 
 def test_block_ids_dense_and_full_blocks_pass_through(spark, workdir):

@@ -95,6 +95,9 @@ def test_server_input_validation(served):
     assert code == 400 and "conv_prefix" in payload["error"]
     code, payload = _get_err(srv.port, "/search?q=x&after=banana")
     assert code == 400 and "invalid timestamp" in payload["error"]
+    for fw in ("abc", "nan", "1,inf"):
+        code, payload = _get_err(srv.port, f"/search?q=x&field_weights={fw}")
+        assert code == 400 and "field_weights" in payload["error"], fw
     code, payload = _get_err(srv.port, "/nope")
     assert code == 404
 
